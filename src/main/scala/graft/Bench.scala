@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -95,21 +94,8 @@ object Bench {
     // Host calibration BEFORE the SparkSession exists (~2 s, untimed):
     // the Spark-free anchor every cross-round drift computation divides by.
     val (calibCpuMs, calibIoMs, calibIoBytes) = hostCalibration(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle parallelism scales with DATA, cores with the machine: at
-    // the bench SF they coincide (32), but a 100× slice needs partitions
-    // small enough to sort/join within task memory — the same knob a
-    // 1000-executor deployment sizes by input volume, surfaced as an env
-    // so scale-stress runs can raise it without re-shaping the bench.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.hostCpus
+    val spark = Sessions.local(cpus)
     // Optional subset (comma-separated names): targeted A/B runs on a
     // family of queries without paying the full suite. Unset → all.
     // Parsed BEFORE the prewarm tier so a targeted run only warms the

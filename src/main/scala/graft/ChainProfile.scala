@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev main: per-JOB wall breakdown of one registry query's chain — the
   * measurement §1 of the optimization guide asks for when the UI is off.
@@ -18,14 +17,7 @@ object ChainProfile {
     val sfDir = args(0)
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val rows = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(Int, Double, String)]())

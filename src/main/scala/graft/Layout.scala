@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * which reports Unknown partitioning, so the captured layout is Unknown
   * and every downstream consumer re-shuffles and re-sorts what was
   * already partitioned and sorted. Measured on one rank-propagation
-  * round (PlanProbe): 4 exchanges + 2 sorts with the naive checkpoint vs
+  * round: 4 exchanges + 2 sorts with the naive checkpoint vs
   * 1 exchange + 1 sort with this one — and the extra exchanges are on
   * the EDGE side, i.e. the 100 TB relation re-shuffling per iteration.
   *
@@ -28,6 +28,13 @@ import org.apache.spark.sql.DataFrame
   * build) would silently run without AQE. The clone shares the
   * SparkContext; only this one materialization plans under it, and the
   * checkpointed LogicalRDD is re-bound to the caller's session.
+  *
+  * Durability contract: every checkpoint here is a `localCheckpoint`,
+  * whose blocks live in executor storage. That is sound on `local[n]`,
+  * where driver and executors share one JVM, but it does not survive
+  * executor loss: a lost block fails the query instead of recomputing
+  * it. The cluster-mode swap is reliable checkpointing, `checkpoint()`
+  * into `spark.checkpoint.dir` (`SparkContext.setCheckpointDir`).
   */
 object Layout {
   def checkpoint(df: DataFrame): DataFrame =

@@ -141,13 +141,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).flatMap(_.toIntOption).getOrElse(8080)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val server = start(spark, dir, port)
     println(s"graft serving $dir on port " +
       s"${server.getAddress.getPort} (/health /etl /recs)")

@@ -198,11 +198,12 @@ object Dedup {
     // but each carries ~|shingle set| rows through two joins, and the
     // second join re-shuffles that product by (d2, s). Measured at the
     // 30× slice: 236M- and 116M-row intermediates for 4.6M candidates
-    // (SweepProbe); at 100× the sort spill of that product filled the
-    // disk. As doc-keyed array joins the flowing relation stays
-    // |candidates| rows; the doc-set side is participants-bounded, so
-    // AQE broadcasts it at bench scales and degrades to a doc-keyed
-    // (never shingle-keyed) shuffle when the dup mass itself is huge.
+    // (executed-plan metrics, SCALING.md); at 100× the sort spill of
+    // that product filled the disk. As doc-keyed array joins the flowing
+    // relation stays |candidates| rows; the doc-set side is
+    // participants-bounded, so AQE broadcasts it at bench scales and
+    // degrades to a doc-keyed (never shingle-keyed) shuffle when the dup
+    // mass itself is huge.
     // array_intersect is exact here — shingle rows are distinct per doc.
     //
     // The adversarial huge-doc split (the `anyHuge` branch) exists
@@ -412,7 +413,7 @@ object Dedup {
     // branches are separate subtrees, and with the verify's joins
     // broadcast there is no reusable exchange between them — a union
     // here executes the whole candidate+verify pipeline TWICE
-    // (confirmed by SweepProbe at 30×). The explode keeps one subtree.
+    // (confirmed in the executed plan at 30×). The explode keeps one subtree.
     val exploded = base.select(explode(array(
         struct(col("d1").as("d"), col("jacc"), lit(true).as("own")),
         struct(col("d2").as("d"), col("jacc"), lit(false).as("own"))))

@@ -1158,7 +1158,8 @@ object GraphAlgs {
             (col(v) / col("__t")).as(v): _*)
       } else {
         val m = df.localCheckpoint(false)
-        val t = m.agg(foldSum(col(v))).head().getDouble(0)
+        val tr = m.agg(foldSum(col(v))).head()
+        val t = if (tr.isNullAt(0)) 0.0 else tr.getDouble(0)
         m.select(m.columns.filter(_ != v).map(col) :+
           (col(v) / lit(t)).as(v): _*)
       }

@@ -343,8 +343,9 @@ object Relational {
     // so each pool thread tags its own jobs): pool.shutdown() alone
     // would leave in-flight job chains running detached on an Await
     // timeout or a fast-failing sibling, competing with whatever query
-    // runs next (r15 advice #3).
-    val jobGroup = "sketch-audit"
+    // runs next (r15 advice #3). The id is unique per call: a fixed one
+    // would let one call's cancel kill a concurrent call's jobs.
+    val jobGroup = s"sketch-audit-${java.util.UUID.randomUUID()}"
     def grouped[T](body: => T): Future[T] = Future {
       spark.sparkContext.setJobGroup(jobGroup, "sketch_audit family",
         interruptOnCancel = true)

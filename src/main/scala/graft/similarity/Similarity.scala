@@ -802,11 +802,9 @@ object Similarity {
   val KnnJoinNProbe: Int = 2
 
   /** The N^1.5 bulk of the batch kNN join — every vector × every member
-    * of its nProbe nearest cells, scored — factored out so cost probes
-    * can measure candidate generation + cosine in isolation from the
-    * downstream top-k machinery. */
-  private[graft] def knnScored(spark: SparkSession, dir: String,
-                               nProbe: Int): DataFrame = {
+    * of its nProbe nearest cells, scored. */
+  private def knnScored(spark: SparkSession, dir: String,
+                        nProbe: Int): DataFrame = {
     val (model, assigned, _) = ivfIndex(spark, dir, 0)
     val centers = model.clusterCenters.map(_.toArray)
     val e = transform(col("embedding"), x => x.cast("double"))

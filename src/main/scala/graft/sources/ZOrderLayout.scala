@@ -443,7 +443,7 @@ object ZOrderLayout {
       .orderBy("o_orderpriority")
   }
 
-  /** Manifest-pruning accounting (spec + probe surface, not an oracle
+  /** Manifest-pruning accounting (PruningSpec surface, not an oracle
     * row: file composition is a physical-layout fact no SQL twin can
     * recompute): (files_total, files_read, ranges). */
   private[graft] def manifestPruneStats(

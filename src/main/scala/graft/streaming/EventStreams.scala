@@ -32,8 +32,8 @@ object EventStreams {
     * repeating that. This listener surfaces every stateOperator's
     * `numRowsDroppedByWatermark` from query progress: a nonzero batch
     * logs a WARN naming the query and the running total, and
-    * [[watermarkDropped]] exposes the counter so ingest paths (builtStore,
-    * StoreScaleProbe) can assert zero instead of trusting input order.
+    * [[watermarkDropped]] exposes the counter so ingest paths
+    * (builtStore) can assert zero instead of trusting input order.
     * Per-query totals are kept after termination (bounded by queries
     * started per JVM — a handful); the terminated-id set is what lets
     * readers wait out the async listener bus. */
@@ -150,26 +150,11 @@ object EventStreams {
     * farther apart than the watermark re-emit; the downstream store merge
     * (maintainEdgeStore) absorbs them idempotently. */
   def dedupedBehavioralEdges(events: DataFrame): DataFrame = {
-    // Optional unsplittable-batch spread — the streaming twin of
-    // Tables.spread: a file-source microbatch is typically ONE
-    // single-row-group parquet file, a one-task scan evaluating the
-    // per-event JSON parse below on a single core. Exchanging the raw
-    // rows round-robin before the extraction distributes the parse —
-    // but it ALSO serializes the whole batch through the one scan
-    // task's shuffle write, and the 100× probe measured the spread a
-    // net LOSS there (flat 12–18 s/batch without it vs 48–194 s with);
-    // the steady-state parse is cheap once the state backend is RocksDB
-    // (see builtStore). Kept behind a default-off knob for sources
-    // whose batches are wider or whose parse is heavier; replay-safe
-    // either way (the dedup keys are the only output columns, so
-    // round-robin placement cannot change emitted content).
-    val spread =
-      if (events.isStreaming &&
-          sys.props.get("spark.graft.stream.spread").contains("true"))
-        events.repartition(
-          events.sparkSession.sessionState.conf.numShufflePartitions)
-      else events
-    val typed = spread.withWatermark("ts", "10 minutes")
+    // No round-robin spread of a one-file microbatch before the JSON
+    // parse: at the 100× slice it serialized the whole batch through the
+    // one scan task's shuffle write, a net loss (12–18 s/batch without
+    // it vs 48–194 s with; SCALING.md).
+    val typed = events.withWatermark("ts", "10 minutes")
       .withColumn("rel_type", Relational.relTypeOf)
       .filter(col("rel_type").isNotNull)
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
@@ -349,12 +334,9 @@ object EventStreams {
       .getOrElse(8)
 
   /** Target compacted file size for [[compactEdgeStore]]: a partition's
-    * chain folds to ceil(bytes/target) files. 128 MiB default (the
-    * warehouse-standard scan split); scale probes shrink it the same
-    * way they size shuffle partitions by data. */
-  private[graft] def CompactTargetBytes: Long =
-    sys.props.get("spark.graft.store.compactTargetBytes").map(_.toLong)
-      .getOrElse(128L * 1024 * 1024)
+    * chain folds to ceil(bytes/target) files. 128 MiB, the
+    * warehouse-standard scan split. */
+  private val CompactTargetBytes: Long = 128L * 1024 * 1024
 
   /** Auto-compaction read budget (VERDICT r12 item 6): SCALING.md's
     * round-12 probe priced the delta-chain read tax as a PER-DIR
@@ -365,10 +347,8 @@ object EventStreams {
     * ~3 dirs. The stream ingest enforces this as POLICY
     * ([[maintainEdgeStore]] checks after every merged batch) so the tax
     * is bounded by the pipeline, not by an operator remembering to
-    * OPTIMIZE. 0 disables (the pre-round-13 posture). */
-  private[graft] def AutoCompactMaxChain: Int =
-    sys.props.get("spark.graft.store.autoCompactMaxChain").map(_.toInt)
-      .getOrElse(3)
+    * OPTIMIZE. A `maxChain` of 0 disables (the pre-round-13 posture). */
+  private[graft] val AutoCompactMaxChain: Int = 3
 
   /** The policy arm of [[compactEdgeStore]]: fold the store iff some
     * live partition's delta chain exceeds `maxChain`. Returns whether a
@@ -963,11 +943,11 @@ object EventStreams {
     * watermark past everything) silently discards most of the input:
     * measured on the sf0.1 slice, a round-robin 8-file spool kept only
     * 24,604 of 93,647 true edges (74% dropped). Backfills
-    * of unordered history must either slice input by time range
-    * ([[graft.StoreScaleProbe]] shows the repartitionByRange spool) or
-    * use the batch path (`mergeEdgeBatch` directly), which has no
-    * watermark. With in-order delivery, store content equals the batch
-    * dedup exactly (asserted in StreamingSpec and by the probe). */
+    * of unordered history must either slice input by time range (a
+    * `repartitionByRange(n, col("ts"))` spool with increasing file
+    * mtimes) or use the batch path (`mergeEdgeBatch` directly), which
+    * has no watermark. With in-order delivery, store content equals the
+    * batch dedup exactly (asserted in StreamingSpec). */
   def maintainEdgeStore(events: DataFrame, storeDir: String,
                         checkpointDir: Option[String] = None,
                         availableNow: Boolean = false)
@@ -978,7 +958,7 @@ object EventStreams {
     requireClaimCapableFs(new Path(storeDir))
     // Out-of-order input must fail LOUDLY, not by scaladoc: the monitor
     // WARNs on any watermark-dropped batch and backs [[watermarkDropped]]
-    // for callers that assert zero (builtStore, StoreScaleProbe).
+    // for callers that assert zero (builtStore).
     ensureDropMonitor(events.sparkSession)
     var w = dedupedBehavioralEdges(events).writeStream
       .outputMode("append")

@@ -59,10 +59,6 @@ object BpeTrainer {
     * pathologically self-interacting corpus. */
   val BatchM = 64
 
-  /** Rounds the most recent non-memoized [[trainedK]] build took — probe
-    * surface for the rounds-sub-linear-in-K claim (never semantics). */
-  @volatile private[graft] var lastRounds: Int = 0
-
   /** The learned merge table: (step, lhs, rhs, pair_count). */
   def trainMerges(spark: SparkSession, dir: String): DataFrame =
     trained(spark, dir)._1.orderBy("step")
@@ -378,8 +374,7 @@ object BpeTrainer {
     * state is ≤ CandC rows, and the corpus re-materializes per ROUND (not
     * per merge) via localCheckpoint — the K-deep plan chain is now
     * K/M-deep. `key` keys the memo (a dir for corpus rows; specs pass
-    * their fixture's identity). Sets [[lastRounds]] (probe surface for
-    * the rounds-sub-linear-in-K claim — never semantics). */
+    * their fixture's identity). */
   private[graft] def trainedK(spark: SparkSession, docs: DataFrame,
                               key: Any, k: Int): (DataFrame, DataFrame) =
     graft.Memo.get(spark, "bpe-merges", (key, k)) {
@@ -398,9 +393,7 @@ object BpeTrainer {
       val acc = scala.collection.mutable.ArrayBuffer
         .empty[(Int, String, String, Long)]
       var exhausted = false
-      var rounds = 0
       while (acc.size < k && !exhausted) {
-        rounds += 1
         val px = corpus
           .withColumn("nxt", lead("sym", 1).over(w))
           .withColumn("nxt2", lead("sym", 2).over(w))
@@ -493,7 +486,6 @@ object BpeTrainer {
         }
         px.unpersist()
       }
-      lastRounds = rounds
       (acc.toSeq.toDF("step", "lhs", "rhs", "pair_count"), corpus)
     }
 

@@ -228,6 +228,18 @@ class GraphSpec extends SparkTestBase {
     assert(gotAuth.map(_._2) == gotAuth.map(_._2).sortBy(-_))
   }
 
+  test("HITS on an empty purchase graph returns no rows") {
+    // The seed tables with every lineitem dropped: nodes exist, but no
+    // customer→product purchase pair does, so both HITS sides are empty.
+    val d = java.nio.file.Files.createTempDirectory("graft-hits-empty").toString
+    for (t <- Seq("customer", "part", "orders", "lineitem", "events")) {
+      val df = spark.read.parquet(s"$dir/$t.parquet")
+      (if (t == "lineitem") df.limit(0) else df)
+        .write.parquet(s"$d/$t.parquet")
+    }
+    assert(GraphAlgs.hitsFixedTop(spark, d).collect().isEmpty)
+  }
+
   test("LPA matches a literal driver-side vote iteration at sf0.001") {
     val sf = "/root/testdata/sf0.001"
     import spark.implicits._

@@ -12,22 +12,21 @@
 # carries its own disqualification, and this script now refuses to
 # bless it rather than leaving the judgment to external context.
 #
-# Usage: tools/bench_clean.sh [accept_total_seconds]
-#   accept_total_seconds: stop early when a clean run beats this total
-#   (default 160).
+# Usage: tools/bench_clean.sh <accept_total_seconds>
+#   accept_total_seconds: stop early when a clean run beats this total.
+#   Required: a good total depends on the host's cores (the 32-core
+#   anchor was 156.8 s, a 4-core run about 210 s).
 #
 # Round-15 additions (VERDICT r14 item 1a — run EARLY and keep editing):
-#   GRAFT_SNAP_CP=<dir>     run off a snapshotted classpath via
-#                           tools/run_snap.sh so a concurrent
-#                           `sbt compile` can't crash the bench mid-run.
+#   GRAFT_SNAP_CP=<dir>     run off a snapshotted classpath (tools/run.sh)
+#                           so a concurrent `sbt compile` can't crash the
+#                           bench mid-run.
 #   GRAFT_BLESS_COMMIT=<sha> stamp blessed_commit with the commit the
 #                           snapshot was built from, not whatever HEAD
 #                           has advanced to by bless time.
 set -uo pipefail
 cd "$(dirname "$0")/.."
-ACCEPT="${1:-160}"
-RUNNER="tools/run.sh"
-[ -n "${GRAFT_SNAP_CP:-}" ] && RUNNER="tools/run_snap.sh"
+ACCEPT="${1:?usage: tools/bench_clean.sh <accept_total_seconds>}"
 best=999999
 rm -f /tmp/bench_clean_best.json
 for i in 1 2 3 4 5; do
@@ -42,8 +41,7 @@ for i in 1 2 3 4 5; do
   rm -f BENCH_FULL_LATEST.json "/tmp/bench_clean_$i.json"
   s0=$(awk '/^cpu /{print $9}' /proc/stat); t0=$(date +%s)
   SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-    SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-    "$RUNNER" graft.Bench > "/tmp/bench_clean_$i.out" 2>"/tmp/bench_clean_$i.err"
+    tools/run.sh graft.Bench > "/tmp/bench_clean_$i.out" 2>"/tmp/bench_clean_$i.err"
   rc=$?
   t1=$(date +%s); s1=$(awk '/^cpu /{print $9}' /proc/stat)
   steal=$((s1 - s0)); wall=$((t1 - t0))
@@ -55,13 +53,14 @@ for i in 1 2 3 4 5; do
   # Stamp the provenance verdict INTO the artifact: clean ⇔ no crashed
   # queries, the artifact's own load_avg_start under 1, and measured
   # external steal under a core-scaled 0.5% budget (cpus * 100 ticks/s
-  # * 0.005 = cpus/2 ticks per wall-second). Round 14 tightened this
+  # * 0.005 = cpus/2 ticks per wall-second; cpus = the host's `nproc`,
+  # since /proc/stat's steal sums over every core). Round 14 tightened this
   # from 2%: a 32-core run admitted 0.55 cores of continuous steal and
   # still stamped clean, inflating the total by ~45 s spread across
   # dozens of untouched queries — an artifact the lineage math then
   # reads as engine drift. All prior blessings (r12 7.5, r13 7.5
   # ticks/s) sit far inside the new budget of 16 ticks/s.
-  cpus="${SPARK_GRAFT_CPUS:-32}"
+  cpus="$(nproc)"
   read -r total failed clean <<< "$(python3 -c "
 import json
 p = '/tmp/bench_clean_$i.json'

@@ -11,13 +11,14 @@
 #   rsync -a --delete target/scala-2.13/classes/ /tmp/graft-classes-snap/
 #   GRAFT_SNAP_CP=/tmp/graft-classes-snap \
 #   GRAFT_BLESS_COMMIT=$(git rev-parse HEAD) \
-#   nohup tools/bench_vigil.sh 5 &
+#   nohup tools/bench_vigil.sh 5 <accept_total_seconds> &
 #
-# Usage: tools/bench_vigil.sh [horizon_hours] [accept_total_seconds]
+# Usage: tools/bench_vigil.sh <horizon_hours> <accept_total_seconds>
+#   accept_total_seconds is required: see tools/bench_clean.sh.
 set -uo pipefail
 cd "$(dirname "$0")/.."
-HOURS="${1:-5}"
-ACCEPT="${2:-160}"
+HOURS="${1:?usage: tools/bench_vigil.sh <horizon_hours> <accept_total_seconds>}"
+ACCEPT="${2:?usage: tools/bench_vigil.sh <horizon_hours> <accept_total_seconds>}"
 deadline=$(( $(date +%s) + HOURS * 3600 ))
 attempt_cycle=0
 while [ "$(date +%s)" -lt "$deadline" ]; do

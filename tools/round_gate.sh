@@ -11,21 +11,22 @@
 #   sfDir:   defaults to /root/testdata/sf0.01 (the driver's gate SF)
 #   outBase: defaults to /tmp/round_gate (dumps land at _a/_b suffixes)
 #
-# Uses the snapshot classpath when GRAFT_SNAP_CP is set (same convention
-# as bench_clean.sh) so the two Verify JVMs survive concurrent compiles.
+# tools/run.sh honors GRAFT_SNAP_CP (a snapshotted classpath) so the two
+# Verify JVMs survive concurrent compiles. A Verify run with any failed
+# query exits 1, and the gate stops there naming the failures.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 BASE="${2:-/tmp/round_gate}"
-RUNNER="tools/run.sh"
-[ -n "${GRAFT_SNAP_CP:-}" ] && RUNNER="tools/run_snap.sh"
 rm -rf "${BASE}_a" "${BASE}_b"
-echo "[round_gate] Verify run A → ${BASE}_a"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" "$RUNNER" graft.Verify "$SF" "${BASE}_a" \
-  > "${BASE}_a.log" 2>&1 || { echo "[round_gate] run A FAILED"; exit 1; }
-echo "[round_gate] Verify run B → ${BASE}_b"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" "$RUNNER" graft.Verify "$SF" "${BASE}_b" \
-  > "${BASE}_b.log" 2>&1 || { echo "[round_gate] run B FAILED"; exit 1; }
+for run in a b; do
+  echo "[round_gate] Verify run ${run^^} → ${BASE}_$run"
+  tools/run.sh graft.Verify "$SF" "${BASE}_$run" > "${BASE}_$run.log" 2>&1 || {
+    echo "[round_gate] run ${run^^} FAILED"
+    grep '^\[verify\] failed' "${BASE}_$run.log"
+    exit 1
+  }
+done
 echo "[round_gate] oracle compare (run A)"
 python3 tools/check_oracle.py "$SF" "${BASE}_a" > "${BASE}_oracle_a.txt" 2>&1
 ORACLE_A=$?

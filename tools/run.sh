@@ -1,10 +1,15 @@
 #!/usr/bin/env bash
 # Run a graft main class with the same JVM module options build.sbt
 # gives forked runs (Kryo/GraphX need java.nio etc. opened on JDK 17+).
-# Usage: tools/run.sh [-mem 16g] <mainClass> [args...]
+# Usage: [GRAFT_SNAP_CP=<dir>] tools/run.sh [-mem <heap>] <mainClass> [args...]
+#   GRAFT_SNAP_CP: run off a snapshotted copy of target/scala-2.13/classes,
+#     so a long Verify/Bench JVM survives a concurrent `sbt compile`
+#     rewriting the classes it loads lazily.
+#   heap: -mem, else SPARK_DRIVER_MEM, else half of RAM clamped to 2-8g.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-MEM="${SPARK_DRIVER_MEM:-16g}"
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 if [ "${1:-}" = "-mem" ]; then MEM="$2"; shift 2; fi
 OPENS=(java.base/java.lang java.base/java.lang.invoke
   java.base/java.lang.reflect java.base/java.io java.base/java.net
@@ -14,7 +19,7 @@ OPENS=(java.base/java.lang java.base/java.lang.invoke
   java.base/sun.util.calendar)
 FLAGS=()
 for p in "${OPENS[@]}"; do FLAGS+=(--add-opens "$p=ALL-UNNAMED"); done
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+CP="${GRAFT_SNAP_CP:-target/scala-2.13/classes}:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java "-Xmx$MEM" "${FLAGS[@]}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" "$@"

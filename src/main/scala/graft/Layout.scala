@@ -40,39 +40,27 @@ object Layout {
   def checkpoint(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftshim.SessionShim.checkpointWithoutAqe(df)
 
-  /** Mode-aware state checkpoint for gated propagation loops: the
-    * co-partitioned path NEEDS the layout visible (the next round's
-    * exchange-free sort-merge join hangs on it), but the broadcast-gated
-    * path does not — the state ships whole regardless, and executing the
-    * round with AQE ON lets the planner broadcast the small summed side
-    * of the state-update join instead of sort-merging it (measured
-    * faster per round at bench scale). */
-  def stateCheckpoint(df: DataFrame, preserveLayout: Boolean): DataFrame =
-    if (preserveLayout) checkpoint(df) else df.localCheckpoint(true)
-
-  /** Per-ROUND checkpoint policy for the gated propagation loops. The
-    * co-partitioned (over-the-gate) path materializes every round: the
-    * next round's exchange-free sort-merge join hangs on the pinned
-    * layout, and at 10⁹-vertex state the plan must stay shallow. The
-    * broadcast path checkpoints every round but LAZILY
-    * (localCheckpoint(eager = false)): the plan is truncated to a
-    * LogicalRDD at call time — every round's plan is depth-1, shallower
-    * than the old K=2 cadence's odd rounds — while the materialization
-    * rides INSIDE the job the next round's state broadcast already
-    * runs, so no round pays a separate checkpoint job. History of this
-    * knob (all at sf0.1 on the shared 10-round rank loop): eager every
-    * round 5.8 s; eager K=2 3.4 s; FULLY lazy (no truncation) 5.9 s —
-    * the lazy chain re-planned the whole history each round. Lazy
-    * per-round checkpointing is the missing quadrant: K=2's job count
-    * minus its materialization jobs, with none of the no-truncation
-    * re-planning (r16 ChainProfile: jobs/round down, see
-    * OPTIMIZATION_r16.md). The final round is always materialized
-    * eagerly — consumers fan out over it. Bit parity is untouched:
-    * segmentation only moves materialization boundaries, never the
-    * computation or its order. */
+  /** Per-ROUND checkpoint policy of [[graft.graph.FixedPoint]], the
+    * propagation driver and its only caller. The co-partitioned
+    * (over-the-gate) path materializes every round: the next round's
+    * exchange-free sort-merge join hangs on the pinned layout, and at
+    * 10⁹-vertex state the plan must stay shallow. The broadcast path
+    * checkpoints every round but LAZILY (localCheckpoint(eager = false)):
+    * the plan is truncated to a LogicalRDD at call time — every round's
+    * plan is depth-1 — while the materialization rides INSIDE the job the
+    * next round's state broadcast already runs, so no round pays a
+    * separate checkpoint job. That is sound only because each step reads
+    * its state once (the driver's step contract). History of this knob
+    * (all at sf0.1 on the shared 10-round rank loop): eager every round
+    * 5.8 s; eager every second round 3.4 s; FULLY lazy (no truncation)
+    * 5.9 s — the lazy chain re-planned the whole history each round; lazy
+    * per-round checkpointing removes the materialization jobs without the
+    * re-planning (OPTIMIZATION_r16.md). The final round is always
+    * materialized eagerly — consumers fan out over it. Bit parity is
+    * untouched: segmentation only moves materialization boundaries, never
+    * the computation or its order. */
   def roundCheckpoint(df: DataFrame, preserveLayout: Boolean,
-                      round: Int, last: Boolean): DataFrame =
+                      last: Boolean): DataFrame =
     if (preserveLayout) checkpoint(df)
-    else if (last) df.localCheckpoint(true)
-    else df.localCheckpoint(false)
+    else df.localCheckpoint(last)
 }

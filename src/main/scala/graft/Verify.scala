@@ -31,7 +31,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         Some(name)
       }
-    }.sorted
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -44,34 +44,27 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Fixture-adaptive oracles (schema-dependent SQL) overlay the static
-    // fallbacks — mirrors the Spark side's runtime schema adaptivity.
-    val adaptive = SparkEntry.oracleSql ++
-      (try graph.GraphRegistry.adaptiveOracles(spark, sfDir)
-       catch { case e: Throwable =>
-         System.err.println(s"[verify] adaptive oracle probe failed: $e")
-         Map.empty[String, String]
-       }) ++
-      // Index-adaptive IVF/PQ twins: pinned centroids/codebooks from the
-      // same memoized index the dumped results read.
-      (try similarity.SimilarityRegistry.adaptiveOracles(spark, sfDir)
-       catch { case e: Throwable =>
-         System.err.println(s"[verify] similarity adaptive oracles failed: $e")
-         Map.empty[String, String]
-       }) ++
-      // Factor-adaptive ALS serving twin: pinned factor matrices from
-      // the same memoized fixed-seed model the dumped result reads.
-      (try operators.RecsRegistry.adaptiveOracles(spark, sfDir)
-       catch { case e: Throwable =>
-         System.err.println(s"[verify] recs adaptive oracles failed: $e")
-         Map.empty[String, String]
-       }) ++
-      // Pinned learned-state twin for the deep BPE merge table.
-      (try text.TextRegistry.adaptiveOracles(spark, sfDir)
-       catch { case e: Throwable =>
-         System.err.println(s"[verify] text adaptive oracles failed: $e")
-         Map.empty[String, String]
-       })
+    // Fixture-adaptive oracles overlay the static fallbacks: schema-
+    // dependent graph SQL, and twins that pin learned state (IVF/PQ
+    // centroids and codebooks, ALS factors, the deep BPE merge table)
+    // from the same memoized state the dumped results read. A failed
+    // overlay leaves its rows on the static SQL and counts as a failure.
+    val overlays: Seq[(String, () => Map[String, String])] = Seq(
+      "graph" -> (() => graph.GraphRegistry.adaptiveOracles(spark, sfDir)),
+      "similarity" ->
+        (() => similarity.SimilarityRegistry.adaptiveOracles(spark, sfDir)),
+      "recs" -> (() => operators.RecsRegistry.adaptiveOracles(spark, sfDir)),
+      "text" -> (() => text.TextRegistry.adaptiveOracles(spark, sfDir)))
+    val overlayFailed = Seq.newBuilder[String]
+    val adaptive = overlays.foldLeft(SparkEntry.oracleSql) {
+      case (acc, (module, build)) =>
+        try acc ++ build()
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $module adaptive oracles failed: $e")
+          overlayFailed += s"adaptive:$module"
+          acc
+        }
+    }
     val oracles =
       if (only.isEmpty) adaptive
       else adaptive.filter { case (n, _) => only(n) }
@@ -79,8 +72,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    println(s"[verify] failed ${failed.size}/${selected.size}" +
-      (if (failed.isEmpty) "" else ": " + failed.mkString(", ")))
-    if (failed.nonEmpty) sys.exit(1)
+    val allFailed = (failed ++ overlayFailed.result()).sorted
+    println(s"[verify] failed ${allFailed.size}/${selected.size + overlays.size}" +
+      (if (allFailed.isEmpty) "" else ": " + allFailed.mkString(", ")))
+    if (allFailed.nonEmpty) sys.exit(1)
   }
 }

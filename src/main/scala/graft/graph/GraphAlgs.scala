@@ -192,37 +192,43 @@ object GraphAlgs {
   private[graft] def rankEdges(spark: SparkSession, dir: String,
                                bySrc: Boolean): DataFrame =
     graft.Memo.get(spark, "fixed-ranks-edges", (dir, bySrc)) {
-      val n = spark.sessionState.conf.numShufflePartitions
       val raw = GraphBuilder.edges(spark, dir).select("src", "dst")
-      val joined =
-        raw.join(raw.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      graft.Layout.checkpoint(
-        if (bySrc) joined.repartition(n, col("src")).sortWithinPartitions("src")
-        else joined.repartition(n, col("dst")))
+      edgeLayout(
+        raw.join(raw.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"),
+        bySrc)
     }
 
-  /** Static undirected distinct edge set PLUS one marked self-loop row
-    * per node, laid out like [[rankEdges]] (min-label propagation joins
-    * its state on src, folds on dst). The self rows are what let a
-    * min-label round fold least(own, min(nbrs)) in ONE keyed
-    * aggregation with the label state referenced ONCE — a round that
-    * also left-joins the previous state would execute a not-yet-
-    * materialized lazy checkpoint twice ([[graft.Layout.roundCheckpoint]]).
-    * Isolated nodes surface through their self row (the old
-    * formulation's left join carried them). */
+  /** The one static layout of every (src, dst) relation a propagation
+    * round joins its state against ([[rankEdges]]): partitioned and
+    * sorted by src for co-partitioned rounds, partitioned by dst under
+    * the broadcast gate; pinned by [[graft.Layout.checkpoint]]. */
+  private[graft] def edgeLayout(df: DataFrame, bySrc: Boolean): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    graft.Layout.checkpoint(
+      if (bySrc) df.repartition(n, col("src")).sortWithinPartitions("src")
+      else df.repartition(n, col("dst")))
+  }
+
+  /** `und` (src, dst) plus one marked self row (v, v) per `ids` row. The
+    * self rows are what let a round fold a node's own value with its
+    * neighbours' in ONE keyed aggregation with the state referenced ONCE
+    * ([[minLabelStep]], [[kCorePeelStep]]) — a round that also joined the
+    * previous state would execute a not-yet-materialized lazy checkpoint
+    * twice (the [[FixedPoint]] step contract). Isolated nodes surface
+    * through their self row. */
+  private def withSelfRows(und: DataFrame, ids: DataFrame): DataFrame =
+    und.withColumn("self", lit(false)).unionByName(
+      ids.select(col("id").as("src"), col("id").as("dst"), lit(true).as("self")))
+
+  /** Static undirected distinct edge set PLUS one marked self row per
+    * node ([[withSelfRows]]), laid out by [[edgeLayout]]. */
   private def undirectedEdges(spark: SparkSession, dir: String,
                               bySrc: Boolean): DataFrame =
     graft.Memo.get(spark, "und-edges", (dir, bySrc)) {
-      val n = spark.sessionState.conf.numShufflePartitions
       val e = GraphBuilder.edges(spark, dir).select("src", "dst")
-      val und = e.unionByName(
-        e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-        .withColumn("self", lit(false))
-        .unionByName(nodesById(spark, dir).select(col("id").as("src"),
-          col("id").as("dst"), lit(true).as("self")))
-      graft.Layout.checkpoint(
-        if (bySrc) und.repartition(n, col("src")).sortWithinPartitions("src")
-        else und.repartition(n, col("dst")))
+      edgeLayout(withSelfRows(e.unionByName(
+          e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
+        nodesById(spark, dir)), bySrc)
     }
 
   /** G4 — total degree per node, top-k, computed relationally: each edge
@@ -674,64 +680,64 @@ object GraphAlgs {
         col("n_core_edges"))
   }
 
-  /** The round-`rounds` survivor set of the peel loop — memoized so the
-    * summary row and the convergence audit ([[kCoreConvergedWithin]])
-    * pay one peeling between them per session. */
+  /** The round-`rounds` survivor set (p) of the peel loop — memoized
+    * so the summary row and the convergence audit
+    * ([[kCoreConvergedWithin]]) pay one peeling between them per session.
+    * Peeling is monotone, so it runs on [[FixedPoint]]'s early exit: the
+    * state is the previous survivors with `changed` = peeled this round. */
   private[graft] def kCoreAlive(spark: SparkSession, dir: String,
                                 k: Int, rounds: Int): DataFrame =
     graft.Memo.get(spark, "kcore-alive", (dir, k, rounds)) {
+      val coPart = stateCoPartitioned(spark, dir)
+      val und = kCoreEdges(spark, dir, coPart)
+      val init = coPurchaseDegrees(spark, dir)
+        .select(col("p").as("id"), lit(false).as("changed"))
+      FixedPoint.run(init, rounds, coPart, monotone = true)(s =>
+        kCorePeelStep(und, s.filter(!col("changed")), k, coPart))
+        .filter(!col("changed")).select(col("id").as("p"))
+    }
+
+  /** Both orientations of the co-purchase pairs plus a marked self row
+    * per vertex, laid out for the gated state join — the static side of
+    * every peel round. */
+  private def kCoreEdges(spark: SparkSession, dir: String,
+                         coPart: Boolean): DataFrame =
+    graft.Memo.get(spark, "kcore-edges", (dir, coPart)) {
       val pairs = coPurchasePairs(spark, dir)
-      var alive = coPurchaseDegrees(spark, dir).select("p")
-        .localCheckpoint(true)
-      // One job per round (r16, §2.6 fewer sync points): the checkpoint
-      // is lazy — the convergence count is the job that materializes it
-      // — and the previous round's count carries forward instead of
-      // re-counting the cached frame. Survivor sets only shrink, so
-      // equal counts ⟺ identical sets (the pre-existing probe logic).
-      var nAlive = -1L
-      var r = 0
-      var converged = false
-      while (r < rounds && !converged) {
-        r += 1
-        val next = kCorePeelStep(pairs, alive, k).localCheckpoint(false)
-        if (r < rounds) {
-          if (nAlive < 0) nAlive = alive.count()
-          val nNext = next.count()
-          converged = nNext == nAlive
-          nAlive = nNext
-        }
-        alive = next
-      }
-      alive
+      edgeLayout(selfAugmentedPairs(
+        pairs.select(col("p1").as("d1"), col("p2").as("d2")),
+        coPurchaseDegrees(spark, dir).select(col("p").as("id"))), coPart)
     }
 
   /** One peel round, uncheckpointed — shared verbatim by the loop and
-    * the convergence probe: restrict the static pair set to surviving
-    * endpoints, recount degrees within the subgraph, keep ≥ k. */
-  private def kCorePeelStep(pairs: DataFrame, alive: DataFrame,
-                            k: Int): DataFrame = {
-    val kept = pairs
-      .join(alive.withColumnRenamed("p", "p1"), "p1")
-      .join(alive.withColumnRenamed("p", "p2"), "p2")
-    kept.select(col("p1").as("p"))
-      .unionAll(kept.select(col("p2").as("p")))
-      .groupBy("p").agg(count(lit(1)).as("d"))
-      .filter(col("d") >= k)
-      .select("p")
+    * the convergence probe. The survivors (id) are joined ONCE onto the
+    * self-augmented pair relation: per dst, the self row says the vertex
+    * survived, the other rows count its surviving neighbours, i.e. its
+    * degree within the surviving subgraph. Every survivor comes out with
+    * changed = (degree < k). */
+  private def kCorePeelStep(und: DataFrame, alive: DataFrame, k: Int,
+                            coPart: Boolean): DataFrame = {
+    val state = alive.select(col("id").as("src"))
+    und.join(if (coPart) state.hint("merge") else broadcast(state), "src")
+      .groupBy(col("dst").as("id"))
+      .agg(max(col("self")).as("alive"),
+        count(when(!col("self"), lit(1))).as("d"))
+      .filter(col("alive"))
+      .select(col("id"), (col("d") < k).as("changed"))
   }
 
   /** True iff peeling reaches its fixed point within `rounds` rounds:
     * one more peel from the round-`rounds` survivors drops nobody.
-    * Peeling is monotone (survivors only shrink), so count equality IS
-    * set equality — no join needed. Memoized; the DuckDB twin in the
-    * `convergence_audit` row unrolls rounds+1 and compares the same
-    * counts, so the boolean is oracle-checked, not assumed. */
+    * Memoized; the DuckDB twin in the `convergence_audit` row unrolls
+    * rounds+1 and compares the survivor counts, so the boolean is
+    * oracle-checked, not assumed. */
   private[graft] def kCoreConvergedWithin(spark: SparkSession, dir: String,
                                           k: Int, rounds: Int): Boolean =
     graft.Memo.get(spark, "kcore-converged", (dir, k, rounds)) {
-      val alive = kCoreAlive(spark, dir, k, rounds)
-      kCorePeelStep(coPurchasePairs(spark, dir), alive, k).count() ==
-        alive.count()
+      val coPart = stateCoPartitioned(spark, dir)
+      kCorePeelStep(kCoreEdges(spark, dir, coPart),
+        kCoreAlive(spark, dir, k, rounds).select(col("p").as("id")), k, coPart)
+        .filter(col("changed")).isEmpty
     }
 
   /** Association rules over baskets: confidence P(cons|ante) and lift
@@ -824,15 +830,17 @@ object GraphAlgs {
     * per-iteration exchange is the |E|-sized contributions fold keyed
     * by dst — the honest shuffle every scalable PageRank pays. Per-dst
     * collect_list is bounded by in-degree, with the fixed-fan-in fold
-    * tree as the hot-sink escape hatch. The layout checkpoint between
-    * iterations keeps the state concrete (a fully lazy chain
-    * re-executes the whole lineage per level — measured pathological)
-    * AND keeps its partitioning visible for the next round's joins.
-    * Memoized: every query on the same (dir, seeds, iters) reads one
-    * propagation. Bit-parity with the oracle is layout-independent (the
-    * sorted fold fixes the summation order), so BOTH join strategies
-    * hash identically — asserted by the oracle rows staying green; both
-    * plan shapes are asserted in PlanAuditSpec. */
+    * tree as the hot-sink escape hatch. The rounds run on the
+    * [[FixedPoint]] driver, whose per-round checkpoint keeps the state
+    * concrete (a fully lazy chain re-executes the whole lineage per
+    * level — measured pathological) AND, over the gate, keeps its
+    * partitioning visible for the next round's joins. Memoized: every
+    * query on the same (dir, seeds, iters) reads one propagation.
+    * Bit-parity with the oracle is layout-independent (the sorted fold
+    * fixes the summation order), so BOTH join strategies hash
+    * identically — asserted by the oracle rows staying green and by
+    * GraphSpec's forced co-partitioned run; both plan shapes are
+    * asserted in PlanAuditSpec. */
   private[graft] def fixedRanks(spark: SparkSession, dir: String,
                                 seeds: Seq[Option[String]], iters: Int): DataFrame =
     graft.Memo.get(spark, "fixed-ranks", (dir, seeds, iters)) {
@@ -856,12 +864,8 @@ object GraphAlgs {
         case (Some(s), j) =>
           when(col("id") === s, lit(1.0)).otherwise(lit(0.0)).as(s"r$j")
       }
-      var ranks = nodes.select(col("id") +: inits: _*)
-      for (i <- 1 to iters)
-        ranks = graft.Layout.roundCheckpoint(
-          rankStep(e, nodes, ranks, seeds, coPart), preserveLayout = coPart,
-          round = i, last = i == iters)
-      ranks
+      FixedPoint.run(nodes.select(col("id") +: inits: _*), iters, coPart)(
+        rankStep(e, nodes, _, seeds, coPart))
   }
 
   /** Default gate: 2M state rows ≈ 60 MB for an id + 3 doubles — inside
@@ -887,16 +891,20 @@ object GraphAlgs {
     * can assert both join shapes on exactly the plan the loop executes:
     * `coPartition = true` must show a sort-merge state join with ONE
     * exchange (the contributions fold) and no BroadcastExchange;
-    * `coPartition = false` (small-|V| gate) broadcasts the state. */
+    * `coPartition = false` (small-|V| gate) broadcasts the state.
+    * `share(j)` is column j's contribution along one edge: rank/outdeg
+    * for PageRank, r·w_c/wout_c for [[weightedPageRankTop]]. */
   private[graft] def rankStep(e: DataFrame, nodes: DataFrame,
                               ranks: DataFrame,
                               seeds: Seq[Option[String]],
-                              coPartition: Boolean): DataFrame = {
+                              coPartition: Boolean,
+                              share: Int => Column =
+                                j => col(s"r$j") / col("outdeg")): DataFrame = {
     val state = ranks.withColumnRenamed("id", "src")
     val contribs = e
       .join(if (coPartition) state.hint("merge") else broadcast(state), "src")
       .select(col("dst").as("id") +: seeds.indices.map(j =>
-        (col(s"r$j") / col("outdeg")).as(s"c$j")): _*)
+        share(j).as(s"c$j")): _*)
     val folds = seeds.indices.map(j =>
       aggregate(sort_array(collect_list(col(s"c$j"))), lit(0.0),
         (s, x) => s + x).as(s"in$j"))
@@ -921,13 +929,10 @@ object GraphAlgs {
   private def weightedRankEdges(spark: SparkSession, dir: String,
                                 bySrc: Boolean): DataFrame =
     graft.Memo.get(spark, "w-rank-edges", (dir, bySrc)) {
-      val n = spark.sessionState.conf.numShufflePartitions
       val e = GraphBuilder.edges(spark, dir).select(col("src"), col("dst"),
         graft.operators.Relational.cents(col("weight")).as("w_c"))
-      val joined = e.join(e.groupBy("src").agg(sum("w_c").as("wout_c")), "src")
-      graft.Layout.checkpoint(
-        if (bySrc) joined.repartition(n, col("src")).sortWithinPartitions("src")
-        else joined.repartition(n, col("dst")))
+      edgeLayout(
+        e.join(e.groupBy("src").agg(sum("w_c").as("wout_c")), "src"), bySrc)
     }
 
   /** Fixed-iteration WEIGHTED PageRank: contribution r·w/Σw along each
@@ -943,23 +948,10 @@ object GraphAlgs {
     val coPart = stateCoPartitioned(spark, dir)
     val e = weightedRankEdges(spark, dir, bySrc = coPart)
     val nodes = nodesById(spark, dir)
-    var ranks = nodes.select(col("id"), lit(1.0).as("r"))
-    for (i <- 1 to iters) {
-      val state = ranks.withColumnRenamed("id", "src")
-      val contribs = e
-        .join(if (coPart) state.hint("merge") else broadcast(state), "src")
-        .select(col("dst").as("id"),
-          (col("r") * col("w_c") / col("wout_c")).as("c"))
-      val summed = contribs.groupBy("id")
-        .agg(aggregate(sort_array(collect_list(col("c"))), lit(0.0),
-          (s, x) => s + x).as("inr"))
-      ranks = graft.Layout.roundCheckpoint(
-        nodes.join(summed, Seq("id"), "left")
-          .select(col("id"),
-            (lit(0.15) + lit(0.85) * coalesce(col("inr"), lit(0.0))).as("r")),
-        preserveLayout = coPart, round = i, last = i == iters)
-    }
-    ranks.select(col("id"), col("r").as("rank"))
+    FixedPoint.run(nodes.select(col("id"), lit(1.0).as("r0")), iters, coPart)(
+      rankStep(e, nodes, _, Seq(None), coPart,
+        share = j => col(s"r$j") * col("w_c") / col("wout_c")))
+      .select(col("id"), col("r0").as("rank"))
       .orderBy(desc("rank"), asc("id")).limit(k)
   }
 
@@ -998,16 +990,12 @@ object GraphAlgs {
       val und = undirectedEdges(spark, dir, bySrc = coPart)
         .filter(!col("self"))
       val nodes = nodesById(spark, dir)
-      var labels = nodes.select(col("id"), col("id").as("label"))
-      for (i <- 1 to rounds)
-        labels = graft.Layout.roundCheckpoint(
-          lpaStep(und, nodes, labels, coPart),
-          preserveLayout = coPart, round = i, last = i == rounds)
-      labels
+      FixedPoint.run(nodes.select(col("id"), col("id").as("label")), rounds,
+        coPart)(lpaStep(und, nodes, _, coPart))
     }
 
   /** One synchronous LPA vote round, uncheckpointed — split out (the
-    * rankStep/pairComponentsStep convention) so the loop and the
+    * rankStep/minLabelStep convention) so the loop and the
     * convergence probe execute the identical formula: per-dst vote
     * count, count-desc-then-min-label argmax over ≤ degree-many rows,
     * isolated nodes keep their own label. Same gated state-join
@@ -1128,9 +1116,8 @@ object GraphAlgs {
     * Scale shape: the state is one double per CONNECTED node per side,
     * gated broadcast-vs-merge like [[fixedRanks]] (a warehouse graph
     * flips to the exchange-free sort-merge path); each half-step pays
-    * one |E|-keyed fold shuffle — the honest cost — plus a 1-row scalar
-    * total broadcast. Per-round state checkpoints via the shared lazy
-    * per-round policy. Output: top-k per side, deterministic total
+    * one |E|-keyed fold shuffle — the honest cost — plus one collected
+    * scalar total. Output: top-k per side, deterministic total
     * order. */
   def hitsFixedTop(spark: SparkSession, dir: String, iters: Int = 5,
                    k: Int = 10): DataFrame = {
@@ -1138,31 +1125,25 @@ object GraphAlgs {
     val e = purchaseEdges(spark, dir)
     def foldSum(c: Column): Column =
       aggregate(sort_array(collect_list(c)), lit(0.0), (s, x) => s + x)
-    // Each half-step materializes its raw fold ONCE (state-sized), then
-    // the L1 total is a cheap scan of the materialized frame and the
-    // normalization a lazy narrow projection over it — without this the
-    // total's agg is a second full execution of the half-step, and the
-    // lazy chains compound across rounds (measured 24 s → ~4 s).
-    // Broadcast path (r16, §2.6 fewer sync points): the checkpoint is
-    // LAZY and the total agg is the job that materializes it — one job
-    // per half-step where the eager checkpoint + broadcast-built total
-    // were two. The total crosses as the exact collected double (the
-    // same value the 1-row broadcast carried; division by the literal
-    // is the identical IEEE op), so rows are bit-identical.
-    def l1(df: DataFrame, v: String): DataFrame =
-      if (coPart) {
-        val m = graft.Layout.stateCheckpoint(df, preserveLayout = true)
-        val tot = m.agg(foldSum(col(v)).as("__t"))
-        m.crossJoin(broadcast(tot))
-          .select(m.columns.filter(c => c != v && c != "__t").map(col) :+
-            (col(v) / col("__t")).as(v): _*)
-      } else {
-        val m = df.localCheckpoint(false)
-        val tr = m.agg(foldSum(col(v))).head()
-        val t = if (tr.isNullAt(0)) 0.0 else tr.getDouble(0)
-        m.select(m.columns.filter(_ != v).map(col) :+
-          (col(v) / lit(t)).as(v): _*)
-      }
+    // HITS stays outside FixedPoint: a round is two half-steps over
+    // alternating state schemas (hubs by c, authorities by p), each
+    // checkpointing its raw fold before it collects the L1 total it
+    // divides by — fitting that would need a HITS-only branch in the
+    // driver. Each half-step materializes its raw fold ONCE
+    // (state-sized): layout-pinned over the gate, a lazy checkpoint under
+    // it, whose first job is the total's scan. The total crosses as the
+    // exact collected double and the normalization is a narrow
+    // projection over the materialized frame — without this the total's
+    // agg is a second full execution of the half-step, and the lazy
+    // chains compound across rounds (measured 24 s → ~4 s).
+    def l1(df: DataFrame, v: String): DataFrame = {
+      val m = if (coPart) graft.Layout.checkpoint(df)
+              else df.localCheckpoint(false)
+      val tr = m.agg(foldSum(col(v))).head()
+      val t = if (tr.isNullAt(0)) 0.0 else tr.getDouble(0)
+      m.select(m.columns.filter(_ != v).map(col) :+
+        (col(v) / lit(t)).as(v): _*)
+    }
     def side(df: DataFrame): DataFrame =
       if (coPart) df.hint("merge") else broadcast(df)
     var hubs = e.select(col("c")).distinct().withColumn("h", lit(1.0))
@@ -1379,95 +1360,40 @@ object GraphAlgs {
   /** The (id, comp) label frame after `rounds` min-label rounds — the
     * loop body of [[componentsFixedSizes]], exposed so the
     * graphx_components convergence audit ([[componentsConvergedWithin]])
-    * can check the labels themselves, not just the histogram. */
+    * can check the labels themselves, not just the histogram. Memoized
+    * so the histogram row and the audit pay one propagation between
+    * them per session. The static undirected edge set is laid out by the
+    * fixedRanks state gate: under it the label state broadcasts onto
+    * dst-partitioned edges and the per-dst min folds in place
+    * (zero-exchange rounds); over it the state join is an exchange-free
+    * sort-merge join against the src-sorted layout and the per-dst min
+    * is the round's one exchange. Min-label is monotone, so the rounds
+    * run on [[FixedPoint]]'s early exit. */
   private[graft] def componentLabels(spark: SparkSession, dir: String,
                                      rounds: Int): DataFrame =
     graft.Memo.get(spark, "component-labels", (dir, rounds)) {
-      componentLabelsLoop(spark, dir, rounds)
+      val coPart = stateCoPartitioned(spark, dir)
+      val und = undirectedEdges(spark, dir, bySrc = coPart)
+      FixedPoint.run(nodesById(spark, dir).select(col("id"),
+          col("id").as("comp")), rounds, coPart, monotone = true)(
+        minLabelStep(und, _, coPart))
+        .select("id", "comp")
     }
-
-  /** Memoized ([[componentLabels]]) so the histogram row and the
-    * convergence audit pay one propagation between them per session. */
-  private def componentLabelsLoop(spark: SparkSession, dir: String,
-                                  rounds: Int): DataFrame = {
-    // Static undirected edge set laid out by the fixedRanks state gate:
-    // under the |V| gate the label state broadcasts onto dst-partitioned
-    // edges and the per-dst min folds in place (zero-exchange rounds);
-    // over it the state join is an exchange-free sort-merge join against
-    // the src-sorted layout and the per-dst min is the round's one
-    // exchange. min(own ∪ nbrs) ≡ least(own, min(nbrs)) on strings
-    // (exact, no float order issues), so the formulation is invisible to
-    // the oracle hash either way.
-    val coPart = stateCoPartitioned(spark, dir)
-    val und = undirectedEdges(spark, dir, bySrc = coPart)
-    var comp = nodesById(spark, dir)
-      .select(col("id"), col("id").as("comp"))
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val state = comp.withColumnRenamed("id", "src")
-      // min(own ∪ nbrs) folded in ONE keyed aggregation over the
-      // self-augmented edge set: the self row carries the node's own
-      // label (isolated nodes surface through it), so no second
-      // reference to the previous state exists anywhere in the round —
-      // a not-yet-materialized lazy checkpoint executes exactly once.
-      // The per-row `changed` flag (new min ≠ own label) rides along so
-      // the convergence probe below is a scan of the checkpoint, not a
-      // second join against the previous state.
-      val next = graft.Layout.roundCheckpoint(
-        und
-          .join(if (coPart) state.hint("merge") else broadcast(state), "src")
-          .select(col("dst").as("id"), col("comp").as("ncomp"), col("self"))
-          .groupBy("id")
-          .agg(min("ncomp").as("comp"),
-            min(when(col("self"), col("ncomp"))).as("own"))
-          .select(col("id"), col("comp"),
-            (col("comp") =!= col("own")).as("changed")),
-        preserveLayout = coPart, round = r, last = r == rounds)
-      // Min-label is monotone: an unchanged round is a fixed point, so
-      // every remaining round is a no-op — skipping them returns exactly
-      // what the oracle's full unrolling computes. Probe every second
-      // round: under the lazy per-round checkpoint the probe's take(1)
-      // is what materializes the round's cache (the broadcast build
-      // completes it), so an every-round probe would only add a
-      // scheduling round-trip per round, not save compute; the cost of
-      // the %2 cadence is at most one no-op extra round after the true
-      // fixed point — still exactly the unrolled result.
-      if (r < rounds && (coPart || r % 2 == 0))
-        converged = next.filter(col("changed")).isEmpty
-      comp = next.select("id", "comp")
-    }
-    comp
-  }
 
   /** True iff min-label propagation reaches its LABEL-LEVEL fixed point
     * within `rounds` rounds — the precondition that binds the
     * full-convergence GraphX result (graphx_components) to the
-    * `rounds`-round unrolled oracle. One extra propagation round from
-    * the round-`rounds` state must change no label (histogram equality
+    * `rounds`-round unrolled oracle. One extra [[minLabelStep]] from the
+    * round-`rounds` state must change no label (histogram equality
     * would be weaker: labels can move while sizes coincide). Memoized
-    * per (dir, rounds): the audit shares the loop's checkpointed state
-    * machinery, so repeat invocations are free. */
+    * per (dir, rounds). */
   private[graft] def componentsConvergedWithin(spark: SparkSession,
       dir: String, rounds: Int): Boolean =
     graft.Memo.get(spark, "components-converged", (dir, rounds)) {
-      val labels = componentLabels(spark, dir, rounds)
       val coPart = stateCoPartitioned(spark, dir)
-      val und = undirectedEdges(spark, dir, bySrc = coPart)
-      val state = labels.withColumnRenamed("id", "src")
-      // Same state-join gate as the propagation loop itself: past the
-      // broadcast gate the |V|-row label frame must NOT broadcast — the
-      // probe joins merge-wise against the src-sorted layout, exactly
-      // like rankStep/pairComponentsStep (shape pinned in PlanAuditSpec).
-      und.join(if (coPart) state.hint("merge") else broadcast(state), "src")
-        .select(col("dst").as("id"), col("comp").as("ncomp"),
-          col("self"))
-        .groupBy("id")
-        .agg(min("ncomp").as("next"),
-          min(when(col("self"), col("ncomp"))).as("own"))
-        .filter(col("next") =!= col("own"))
-        .isEmpty
+      minLabelStep(undirectedEdges(spark, dir, bySrc = coPart),
+        componentLabels(spark, dir, rounds), coPart)
+        .filter(col("changed")).isEmpty
     }
 
   /** Bounded-round min-label components over an arbitrary verified pair
@@ -1476,68 +1402,56 @@ object GraphAlgs {
     * propagate the min label `rounds` times, one row of state per
     * member. Join strategy is the same exact-count state gate as the
     * graph loops: under it the label state broadcasts onto the
-    * d2-partitioned pair set (zero-exchange rounds); over it the rounds
-    * run as exchange-free sort-merge joins against the d1-sorted layout
+    * dst-partitioned pair set (zero-exchange rounds); over it the rounds
+    * run as exchange-free sort-merge joins against the src-sorted layout
     * — no |members| broadcast anywhere. Bounded rounds are the
     * SEMANTICS (clusters = "within `rounds` propagation hops"), which
     * is what keeps the oracle an exact unrolled twin. */
   def pairComponents(pairs: DataFrame, rounds: Int): DataFrame = {
     val spark = pairs.sparkSession
-    val n = spark.sessionState.conf.numShufflePartitions
     // Materialize the (often expensive) pair plan ONCE: the und layout,
     // the gate count, and the label init below would otherwise each
     // re-execute the full upstream pipeline (measured 3× the pair cost).
     val p = pairs.localCheckpoint(true)
-    val undRaw = p.unionByName(
-      p.select(col("d2").as("d1"), col("d1").as("d2")))
-    val members = undRaw.select(col("d1").as("id")).distinct()
+    val members = p.select(col("d1").as("id"))
+      .unionByName(p.select(col("d2").as("id"))).distinct()
       .localCheckpoint(true)
     val coPart = members.count() > stateBroadcastMaxRows(spark)
-    // Marked self rows, as in undirectedEdges: they let each round fold
-    // least(own, min(nbrs)) with the label state referenced ONCE.
-    val undSelf = undRaw.withColumn("self", lit(false)).unionByName(
-      members.select(col("id").as("d1"), col("id").as("d2"),
-        lit(true).as("self")))
-    val und = graft.Layout.checkpoint(
-      if (coPart) undSelf.repartition(n, col("d1")).sortWithinPartitions("d1")
-      else undSelf.repartition(n, col("d2")))
-    var comp = members.withColumn("comp", col("id"))
-    var converged = false
-    for (r <- 1 to rounds if !converged) {
-      comp = graft.Layout.roundCheckpoint(
-        pairComponentsStep(und, comp, coPart), preserveLayout = coPart,
-        round = r, last = r == rounds)
-      // Min-label is monotone: an unchanged round is a fixed point, so
-      // every remaining round is a no-op — skipping them returns exactly
-      // the full unrolling (the componentsFixedSizes argument). Probe
-      // every second round: under the lazy per-round checkpoint the
-      // probe is what materializes the round's cache, so an every-round
-      // probe would only add a scheduling round-trip; at most one extra
-      // no-op round past the true fixed point.
-      if (coPart || r % 2 == 0 || r == rounds)
-        converged = comp.filter(col("changed")).isEmpty
-    }
-    comp.select("id", "comp")
+    val und = edgeLayout(selfAugmentedPairs(p, members), coPart)
+    FixedPoint.run(members.withColumn("comp", col("id")), rounds, coPart,
+      monotone = true)(minLabelStep(und, _, coPart))
+      .select("id", "comp")
   }
 
-  /** One min-label round, UNcheckpointed — split out (like [[rankStep]])
-    * so PlanAuditSpec can assert both join shapes on exactly the plan
-    * the loop executes: co-partitioned must be an exchange-light
-    * sort-merge state join, gated must broadcast the label state.
-    * `und` carries the marked self rows ([[pairComponents]]), so
-    * min(own ∪ nbrs) folds in ONE keyed aggregation — per-d2 in-place
-    * under the gate, the round's one pair-relation-sized exchange over
-    * it — and the label state is referenced exactly once (a second
-    * reference would execute a not-yet-materialized lazy checkpoint
-    * twice). The per-row `changed` flag (new min ≠ the self
-    * row's own label) rides along so the convergence probe is a scan of
-    * the round's checkpoint, not a second join against the state. */
-  private[graft] def pairComponentsStep(und: DataFrame, comp: DataFrame,
-                                        coPartition: Boolean): DataFrame = {
-    val state = comp.withColumnRenamed("id", "d1")
+  /** Both orientations of a pair relation (d1, d2) as (src, dst), plus
+    * a marked self row per member ([[withSelfRows]]) — the static side
+    * of every [[pairComponents]] round and of its convergence probe. */
+  private[graft] def selfAugmentedPairs(p: DataFrame,
+                                        members: DataFrame): DataFrame =
+    withSelfRows(p.select(col("d1").as("src"), col("d2").as("dst"))
+      .unionByName(p.select(col("d2").as("src"), col("d1").as("dst"))),
+      members)
+
+  /** The one min-label round, UNcheckpointed — shared by the graph
+    * components loop, [[pairComponents]] and both convergence probes,
+    * and split out (like [[rankStep]]) so PlanAuditSpec can assert both
+    * join shapes on exactly the plan the loop executes: co-partitioned
+    * must be an exchange-light sort-merge state join, gated must
+    * broadcast the label state. `und` carries marked self rows
+    * ([[withSelfRows]]), so min(own ∪ nbrs) folds in ONE keyed
+    * aggregation — per-dst in place under the gate, the round's one
+    * exchange over it — with the label state referenced exactly once.
+    * min(own ∪ nbrs) ≡ least(own, min(nbrs)) on exact keys, so the
+    * formulation is invisible to the oracle hash. The per-row `changed`
+    * flag (new min ≠ the self row's own label) is the monotone flag
+    * [[FixedPoint]] probes, a scan of the round's checkpoint rather than
+    * a second join against the state. */
+  private[graft] def minLabelStep(und: DataFrame, comp: DataFrame,
+                                  coPartition: Boolean): DataFrame = {
+    val state = comp.select(col("id").as("src"), col("comp"))
     und
-      .join(if (coPartition) state.hint("merge") else broadcast(state), "d1")
-      .select(col("d2").as("id"), col("comp").as("ncomp"), col("self"))
+      .join(if (coPartition) state.hint("merge") else broadcast(state), "src")
+      .select(col("dst").as("id"), col("comp").as("ncomp"), col("self"))
       .groupBy("id")
       .agg(min("ncomp").as("comp"),
         min(when(col("self"), col("ncomp"))).as("own"))
@@ -1548,27 +1462,22 @@ object GraphAlgs {
   /** True iff bounded-round min-label propagation over `pairs` reaches
     * its LABEL-LEVEL fixed point at `labels` (the memoized round-N
     * state of [[pairComponents]] over the same pair relation): one more
-    * [[pairComponentsStep]] must change no label. The in-loop probe is
-    * only sufficient ("round N was a no-op"), not necessary — the last
-    * round may settle everything — so the audit re-runs one genuine
-    * step. Same exact-count state gate as the loop (the |members| label
-    * frame must never broadcast past it — the componentsConvergedWithin
-    * lesson). Memoized per caller-supplied key; the DuckDB twin unrolls
-    * rounds+1 over the same pair CTEs, so the boolean is oracle-checked
-    * rather than assumed by either engine. */
+    * [[minLabelStep]] must change no label. An early exit inside the
+    * loop is only sufficient ("some round was a no-op"), not necessary —
+    * the last round may settle everything — so the audit re-runs one
+    * genuine step. Same exact-count state gate as the loop (the
+    * |members| label frame must never broadcast past it). Memoized per
+    * caller-supplied key; the DuckDB twin unrolls rounds+1 over the same
+    * pair CTEs, so the boolean is oracle-checked rather than assumed by
+    * either engine. */
   private[graft] def pairComponentsConvergedWithin(
       spark: SparkSession, cacheKey: Any, pairs: DataFrame,
       labels: DataFrame): Boolean =
     graft.Memo.get(spark, "pair-comp-converged", cacheKey) {
-      val p = pairs.localCheckpoint(true)
-      val undRaw = p.unionByName(
-        p.select(col("d2").as("d1"), col("d1").as("d2")))
       val members = labels.select(col("id"))
-      val undSelf = undRaw.withColumn("self", lit(false)).unionByName(
-        members.select(col("id").as("d1"), col("id").as("d2"),
-          lit(true).as("self")))
       val coPart = members.count() > stateBroadcastMaxRows(spark)
-      pairComponentsStep(undSelf, labels, coPart)
+      minLabelStep(selfAugmentedPairs(pairs.localCheckpoint(true), members),
+        labels, coPart)
         .filter(col("changed")).isEmpty
     }
 

@@ -900,7 +900,10 @@ object Similarity {
     * scan of the corpus + a 1-row broadcast back — the state is 64
     * doubles however big the corpus is. Output: the 64 loadings plus
     * the Rayleigh-quotient-style gain (the pre-normalization norm, an
-    * eigenvalue estimate under the same fold order). */
+    * eigenvalue estimate under the same fold order). Only well-formed
+    * embeddings enter the fold — exactly 64 elements, none null — on
+    * both engines; one short or null-element row would otherwise turn
+    * its chunk's fold, and with it every output, null. */
   def powerIteration(spark: SparkSession, dir: String,
                      iters: Int = 3): DataFrame = {
     val dim = 64
@@ -914,28 +917,31 @@ object Similarity {
     // folds exactly its own value multiset in sort_array order with the
     // same 0.0 seed — only the container changed (per-dim columns →
     // positions of one array), so the oracle twin stays byte-identical.
-    // Per-dim extract + sorted fold over a collected list-of-arrays, as
-    // one array-valued expression. Stricter failure mode than the old
-    // per-dim collect_list (r15 advice #2): collect_list silently
-    // dropped null ELEMENTS, so a malformed/short embedding excluded
-    // only itself; element_at past an array's end yields null and a
-    // null poisons its chunk's fold (the whole result goes NaN/null —
-    // loudly wrong, not quietly wrong). Acceptable because the
-    // embeddings fixture is 64-dim non-null by construction (emb()
-    // materializes fixed-width arrays); a lossy-input corpus would
-    // need a size(e)=64 AND !array_contains-null gate before the loop.
     def perDimFolds(lst: Column): Column =
       transform(sequence(lit(1), lit(dim)), d =>
         aggregate(sort_array(transform(lst, a => element_at(a, d))),
           lit(0.0), (s, x) => s + x))
-    val e = emb(spark, dir).select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("e"))
-    // v rides as ONE array column; the row-wise dot product keeps the
-    // explicit left-assoc reduce (same chain as before, ±0.0-exact).
-    var v: DataFrame = spark.range(1).select(
-      array((0 until dim).map(_ => lit(0.125)): _*).as("v"))
-    var lastGain: DataFrame = null
-    for (_ <- 1 to iters) {
+    val e = emb(spark, dir)
+      .filter(size(col("embedding")) === dim &&
+        forall(col("embedding"), x => x.isNotNull))
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("e"))
+    // The state is the raw 1-row fold u; each round normalizes it to v
+    // as a narrow projection (one read of the state — the FixedPoint
+    // step contract) and the gain is the same norm. The start u is the
+    // all-0.125 vector, whose norm is exactly 1.0 (64 · 0.125² = 1 with
+    // every partial sum exact), so round 1's v is the all-0.125 start.
+    val nrm = sqrt((0 until dim).map(d =>
+      element_at(col("u"), d + 1) * element_at(col("u"), d + 1))
+      .reduce(_ + _))
+    val normalized = transform(col("u"), x => x / nrm)
+    val u0 = spark.range(1).select(
+      array((0 until dim).map(_ => lit(0.125)): _*).as("u"))
+    val u = graft.graph.FixedPoint.run(u0, iters,
+        coPartitioned = false) { uPrev =>
+      // v rides as ONE array column; the row-wise dot product keeps the
+      // explicit left-assoc reduce (same chain as before, ±0.0-exact).
+      val v = uPrev.select(normalized.as("v"))
       val s = (0 until dim).map(d =>
         element_at(col("e"), d + 1) * element_at(col("v"), d + 1))
         .reduce(_ + _)
@@ -944,24 +950,15 @@ object Similarity {
       val lvl = scored.groupBy(shiftright(col("vec_id"), 10).as("chunk"))
         .agg(collect_list(col("xs")).as("lst"))
         .select(perDimFolds(col("lst")).as("u"))
-      val u = lvl.agg(collect_list(col("u")).as("lst"))
+      lvl.agg(collect_list(col("u")).as("lst"))
         .select(perDimFolds(col("lst")).as("u"))
-      val nrm = sqrt((0 until dim).map(d =>
-        element_at(col("u"), d + 1) * element_at(col("u"), d + 1))
-        .reduce(_ + _))
-      // one materialization of the 1-row state; gain and v are narrow
-      // projections over it (no re-execution of the corpus scan). Lazy
-      // (r16): the plan truncates here but the corpus scan executes
-      // inside the job that already consumes uM (the next round's
-      // broadcast(v) build, or the final posexplode) — one job per
-      // round instead of checkpoint + broadcast-build.
-      val uM = u.localCheckpoint(false)
-      lastGain = uM.select(nrm.as("gain"))
-      v = uM.select(transform(col("u"), x => x / nrm).as("v"))
     }
-    val loadings = v.select(posexplode(col("v")).as(Seq("dim", "loading")))
-      .select(col("dim").cast("bigint").as("dim"), col("loading"))
-    loadings.crossJoin(broadcast(lastGain)).orderBy("dim")
+    // Loadings and gain are projections of the one materialized final
+    // row, read once.
+    u.select(posexplode(normalized).as(Seq("dim", "loading")), nrm.as("gain"))
+      .select(col("dim").cast("bigint").as("dim"), col("loading"),
+        col("gain"))
+      .orderBy("dim")
   }
 
   /** Exact squared-L2 top-k — the ADC family's exact baseline (cosine

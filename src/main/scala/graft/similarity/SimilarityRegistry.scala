@@ -250,8 +250,10 @@ object SimilarityRegistry {
     )
   )
 
-  /** Twin of Similarity.powerIteration: unrolled rounds, the same
-    * two-level chunked sorted folds, the same fixed-order norm chain. */
+  /** Twin of Similarity.powerIteration: the same well-formed-row gate
+    * (64 elements, none null: list_count skips NULLs), unrolled rounds,
+    * the same two-level chunked sorted folds, the same fixed-order norm
+    * chain. */
   private def powerIterationSql(iters: Int): String = {
     val dim = 64
     val dots = (0 until dim).map(d => s"e[${d + 1}] * c$d").mkString(" + ")
@@ -266,7 +268,8 @@ object SimilarityRegistry {
     val head =
       s"""WITH ve AS MATERIALIZED (SELECT vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings),
+         |  FROM embeddings
+         |  WHERE len(embedding) = $dim AND list_count(embedding) = $dim),
          |pv0 AS (SELECT ${(0 until dim)
           .map(d => s"CAST(0.125 AS DOUBLE) AS c$d").mkString(", ")})"""
         .stripMargin

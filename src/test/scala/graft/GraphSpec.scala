@@ -356,6 +356,84 @@ class GraphSpec extends SparkTestBase {
     assert(got == expected)
   }
 
+  test("every propagation family returns materialized state, never a lazy checkpoint") {
+    // A lazy checkpoint that reaches its consumers unmaterialized runs
+    // once per reference (k-core's peel step used to join its final round
+    // twice). Every checkpoint under a family's returned frame must
+    // report isCheckpointed before anything consumes it. Horizons and k
+    // values no other test uses keep the Memo keys fresh, so no earlier
+    // consumer can have materialized the state.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.col
+    val sf = "/root/testdata/sf0.001"
+    def assertMaterialized(family: String, df: DataFrame): Unit = {
+      val rdds = df.queryExecution.logical.collect { case l: LogicalRDD => l.rdd }
+      assert(rdds.nonEmpty, s"$family: no checkpoint under the returned frame")
+      rdds.foreach(rdd => assert(rdd.isCheckpointed,
+        s"$family returned an unmaterialized lazy checkpoint"))
+    }
+    assertMaterialized("k-core", GraphAlgs.kCoreAlive(spark, sf, 3, 1))
+    assertMaterialized("k-core early exit", GraphAlgs.kCoreAlive(spark, sf, 3, 9))
+    assertMaterialized("ranks",
+      GraphAlgs.fixedRanksUncached(spark, sf, Seq(None), 1))
+    assertMaterialized("weighted ranks",
+      GraphAlgs.weightedPageRankTop(spark, sf, iters = 1))
+    assertMaterialized("lpa", GraphAlgs.lpaLabels(spark, sf, 1))
+    assertMaterialized("components", GraphAlgs.componentLabels(spark, sf, 1))
+    assertMaterialized("components early exit",
+      GraphAlgs.componentLabels(spark, sf, 9))
+    val pairs = GraphAlgs.coPurchasePairs(spark, sf)
+      .select(col("p1").as("d1"), col("p2").as("d2"))
+    assertMaterialized("pair components", GraphAlgs.pairComponents(pairs, 1))
+    assertMaterialized("pair components early exit",
+      GraphAlgs.pairComponents(pairs, 9))
+    assertMaterialized("hits", GraphAlgs.hitsFixedTop(spark, sf, iters = 1))
+    assertMaterialized("power iteration",
+      graft.similarity.Similarity.powerIteration(spark, sf, iters = 1))
+  }
+
+  test("co-partitioned rounds return the broadcast-gated rows, byte for byte") {
+    // Forces every propagation family over the |V| state gate
+    // (maxRows = 0) at sf0.001 and compares each one's full state with
+    // the gated run. The forced run reads the same tables under a second
+    // path spelling: every Memo entry is keyed by dir, so all of its
+    // state is built fresh under the forced gate.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    val sf = "/root/testdata/sf0.001"
+    val gate = "spark.graft.state.broadcast.maxRows"
+    def families(d: String): Seq[(String, Seq[String])] = {
+      def rows(df: DataFrame): Seq[String] =
+        df.collect().map(_.mkString("|")).toSeq.sorted
+      Seq(
+        "ranks" -> GraphAlgs.fixedRanksUncached(spark, d,
+          GraphAlgs.SharedRankSeeds, 10),
+        "weighted ranks" -> GraphAlgs.weightedPageRankTop(spark, d, k = 1000000),
+        "lpa" -> GraphAlgs.lpaLabels(spark, d, GraphAlgs.LpaRounds),
+        "k-core" -> GraphAlgs.kCoreAlive(spark, d, 2, GraphAlgs.KCoreRounds),
+        "components" -> GraphAlgs.componentLabels(spark, d,
+          GraphAlgs.ComponentsOracleRounds),
+        "pair components" -> GraphAlgs.pairComponents(
+          GraphAlgs.coPurchasePairs(spark, d)
+            .select(col("p1").as("d1"), col("p2").as("d2")), 5),
+        "hits" -> GraphAlgs.hitsFixedTop(spark, d, k = 1000000))
+        .map { case (f, df) => f -> rows(df) }
+    }
+    val gated = families(sf)
+    spark.conf.set(gate, "0")
+    val forced =
+      try {
+        assert(GraphAlgs.stateCoPartitioned(spark, "file:" + sf))
+        families("file:" + sf)
+      } finally spark.conf.unset(gate)
+    assert(!GraphAlgs.stateCoPartitioned(spark, sf))
+    for (((f, want), (_, got)) <- gated.zip(forced)) {
+      assert(want.nonEmpty, s"$f: empty at sf0.001 — nothing compared")
+      assert(got == want, s"$f: co-partitioned rows differ from the gated run")
+    }
+  }
+
   test("k-core summary matches a literal 5-round peel at sf0.001") {
     val sf = "/root/testdata/sf0.001"
     val pairs = GraphAlgs.coPurchasePairs(spark, sf).collect()

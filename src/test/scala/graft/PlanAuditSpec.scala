@@ -32,13 +32,18 @@ class PlanAuditSpec extends SparkTestBase {
     "graphx_float_audit", "store_components_at", "store_compaction_report",
     "sketch_audit", "convergence_audit")
 
-  private def lazyRegistryRows =
+  /** Every lazy registry row planned ONCE, shared by the three
+    * whole-registry invariants below (each used to re-plan all of them). */
+  private lazy val lazyRegistryPlans
+      : Seq[(String, org.apache.spark.sql.execution.SparkPlan)] =
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (n, _) => driverFoldRows(n) }
+      .map { case (name, fn) =>
+        name -> fn(spark, dir).queryExecution.executedPlan }
 
   test("no registry query plans an unbounded CartesianProduct") {
-    for ((name, fn) <- lazyRegistryRows) {
-      val plan = fn(spark, dir).queryExecution.executedPlan.toString
+    for ((name, executed) <- lazyRegistryPlans) {
+      val plan = executed.toString
       assert(!plan.contains("CartesianProduct"),
         s"$name plans a cartesian product:\n$plan")
     }
@@ -51,9 +56,8 @@ class PlanAuditSpec extends SparkTestBase {
     // directly from scanned rows — the shape that turns a 100 TB scan
     // into a one-task sort. Queries justified to violate this would be
     // whitelisted here with a reason; today none need it.
-    for ((name, fn) <- lazyRegistryRows) {
-      val plan = fn(spark, dir).queryExecution.executedPlan.toString
-      assertSinglePartitionOnlyAboveAgg(name, plan)
+    for ((name, executed) <- lazyRegistryPlans) {
+      assertSinglePartitionOnlyAboveAgg(name, executed.toString)
     }
   }
 
@@ -164,22 +168,15 @@ class PlanAuditSpec extends SparkTestBase {
     // The near-dup clustering tail (shared by the MinHash and SRP
     // pipelines) must survive a member set over the state gate: audit
     // the exact round plan with coPartition = true — sort-merge state
-    // join against the d1-sorted pair layout, no BroadcastExchange.
-    import org.apache.spark.sql.functions.lit
-    val n = spark.sessionState.conf.numShufflePartitions
+    // join against the src-sorted pair layout, no BroadcastExchange.
     val pairs = graft.dedup.Dedup.minhashLshPairs(spark, dir)
       .select("d1", "d2").localCheckpoint(true)
-    val undRaw = pairs.unionByName(
-      pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-    val members = undRaw.select(col("d1").as("id")).distinct()
-    val und = Layout.checkpoint(
-      undRaw.withColumn("self", lit(false))
-        .unionByName(members.select(col("id").as("d1"), col("id").as("d2"),
-          lit(true).as("self")))
-        .repartition(n, col("d1")).sortWithinPartitions("d1"))
+    val members = pairs.select(col("d1").as("id"))
+      .unionByName(pairs.select(col("d2").as("id"))).distinct()
+    val und = graph.GraphAlgs.edgeLayout(
+      graph.GraphAlgs.selfAugmentedPairs(pairs, members), bySrc = true)
     val comp = members.withColumn("comp", col("id"))
-    val step = graph.GraphAlgs.pairComponentsStep(und, comp,
-      coPartition = true)
+    val step = graph.GraphAlgs.minLabelStep(und, comp, coPartition = true)
     val plan = step.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"),
       s"label-state join is not a sort-merge join:\n$plan")
@@ -371,8 +368,8 @@ class PlanAuditSpec extends SparkTestBase {
       }
       self + kids.map(globalWindows).sum
     }
-    val offenders = (for ((name, fn) <- lazyRegistryRows) yield {
-      val n = globalWindows(fn(spark, dir).queryExecution.executedPlan)
+    val offenders = (for ((name, executed) <- lazyRegistryPlans) yield {
+      val n = globalWindows(executed)
       if (n > 0) Some(name) else None
     }).flatten.toSet
     // Whitelist, each entry justified at the cited operator site:

@@ -379,6 +379,32 @@ class SimilaritySpec extends SparkTestBase {
     assert(math.abs(norm - 1.0) < 1e-12)
   }
 
+  test("power iteration skips short and null-element embeddings") {
+    // Two malformed copies of real rows — one cut to 3 elements, one
+    // with a null element — must leave the result exactly as it is
+    // without them (ungated, either one turns every output null).
+    import org.apache.spark.sql.functions._
+    val base = Tables.load(spark, dir, "embeddings")
+    val maxId = base.agg(max("vec_id")).head().getLong(0)
+    val bad = base.orderBy("vec_id").limit(2)
+      .withColumn("vec_id",
+        row_number().over(org.apache.spark.sql.expressions.Window
+          .orderBy("vec_id")).cast("long") + maxId)
+      .withColumn("embedding",
+        when(col("vec_id") === maxId + 1, slice(col("embedding"), 1, 3))
+          .otherwise(transform(col("embedding"),
+            (x, i) => when(i === 5, lit(null)).otherwise(x))))
+    val d = java.nio.file.Files.createTempDirectory("graft-power-gate")
+      .toString
+    base.unionByName(bad).write.parquet(s"$d/embeddings.parquet")
+    def rows(sf: String): Seq[String] =
+      Similarity.powerIteration(spark, sf).collect().map(_.mkString("|"))
+        .toSeq
+    val want = rows(dir)
+    assert(want.length == 64)
+    assert(rows(d) == want)
+  }
+
   test("vector coverage: per-source counts reconcile with a brute semi-join") {
     import org.apache.spark.sql.functions.col
     val rows = Similarity.vectorCoverage(spark, dir).collect()

@@ -124,11 +124,13 @@ object GraphAlgs {
     purchaseEdges(spark, dir).count()
     hitsFixedTop(spark, dir, iters = 1, k = 1).count()
     lpaCommunities(spark, dir, rounds = 1, k = 1).count()
-    // The undirected product graph (basket arrays + distinct co-purchase
-    // pairs) is the same class of static derived layout as rankEdges —
-    // shared input of the triangle, k-core, clustering and item-item
-    // families. The analytics over it stay measured.
-    coPurchasePairs(spark, dir).count()
+    // The counted pair relation is the same class of static derived
+    // layout as rankEdges: every co-occurrence family (all-pairs,
+    // item-item, association rules) and the undirected product graph
+    // under the triangle, k-core and clustering families are projections
+    // of it. Its build materializes it; the analytics over it stay
+    // measured.
+    pairCounts(spark, dir)
     // ONE index-state accounting convention (r9 verdict item 1): the
     // full GraphX kernel runs (static PageRank, delta-PPR from the
     // shared seeds) and the shared 10-round exact propagation are
@@ -412,65 +414,65 @@ object GraphAlgs {
     * (testdata max basket ≈ dozens). */
   val MaxBasketSize = 1000
 
-  /** Size-capped order baskets — the shared first stage of every
-    * basket-pair derivation below: ONE shuffle gathers each basket into
-    * a list, oversized baskets dropped per [[MaxBasketSize]]. Centralized
-    * so the cap semantics cannot diverge between the pair consumers. */
-  /** Per-order basket arrays, size-capped. Memoized + persisted: four
-    * pair-generating consumers (all-pairs, item-item, the co-purchase
-    * pair relations) each paid the same contains-edge shuffle + gather
-    * otherwise. Basket LIST ORDER is collect_list-nondeterministic, but
-    * every consumer only compares elements (p2 > p1 / p2 =!= p1), so
-    * the cached arrays are semantically order-free. */
-  private def boundedBaskets(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.get(spark, "bounded-baskets", dir) {
+  /** The counted co-purchase pair relation `(p1, p2, n12)`: every
+    * product pair p1 < p2 with n12 = the number of orders holding both —
+    * the ONE basket fan-out in this file. All-pairs top-k, the item-item
+    * table, the co-purchase graph ([[coPurchasePairs]]) and association
+    * rules are projections of it.
+    *
+    * One shuffle gathers each order's basket into a list, oversized
+    * baskets dropped per [[MaxBasketSize]] (centralized here, so the cap
+    * semantics cannot diverge between consumers); the pair fan-out runs
+    * in-partition via higher-order functions (no self-join — the join
+    * formulation shuffled the item relation three times); the pair count
+    * is the second and last shuffle, and per-row memory is bounded by
+    * MaxBasketSize². Basket LIST ORDER is collect_list-nondeterministic,
+    * but the fan-out only compares elements (p2 > p1), so the counts are
+    * order-free. Because the baskets come from the distinct CONTAINS
+    * edges, the count of an unordered pair is also the count of each of
+    * its two orientations. Memoized and materialized inside the build,
+    * so no consumer ever reads it as a lazy frame. */
+  def pairCounts(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.get(spark, "pair-counts", dir) {
       graft.operators.Recs.containsEdges(spark, dir)
         .groupBy("order_id")
         .agg(collect_list(col("product_id")).as("ps"))
         .filter(size(col("ps")) <= MaxBasketSize)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(explode(flatten(transform(col("ps"),
+          p1 => transform(filter(col("ps"), p2 => p2 > p1),
+            p2 => struct(p1.as("p1"), p2.as("p2")))))).as("pair"))
+        .groupBy(col("pair.p1").as("p1"), col("pair.p2").as("p2"))
+        .agg(count(lit(1)).as("n12"))
+        .localCheckpoint(true)
     }
 
-  /** G5 all-pairs variant — materialized co-occurrence: top-k product pairs
-    * by shared orders. ONE shuffle gathers each basket, the pair fan-out
-    * happens in-partition via higher-order functions (no self-join — the
-    * join formulation shuffled the item relation three times), and the
-    * pair aggregation is the second and last shuffle. Oversized baskets
-    * are dropped inside the same aggregation; per-row memory is bounded
-    * by MaxBasketSize². */
+  /** G5 all-pairs variant — materialized co-occurrence: top-k product
+    * pairs by shared orders, a top-k of [[pairCounts]]. */
   def allPairsCoOccurrence(spark: SparkSession, dir: String,
-                           k: Int = 20): DataFrame = {
-    val pairs = boundedBaskets(spark, dir)
-      .select(explode(flatten(transform(col("ps"),
-        p1 => transform(filter(col("ps"), p2 => p2 > p1),
-          p2 => struct(p1.as("p1"), p2.as("p2")))))).as("pair"))
-    pairs.select(col("pair.p1").as("p1"), col("pair.p2").as("p2"))
-      .groupBy("p1", "p2")
-      .agg(count(lit(1)).as("n_orders"))
+                           k: Int = 20): DataFrame =
+    pairCounts(spark, dir)
+      .select(col("p1"), col("p2"), col("n12").as("n_orders"))
       .orderBy(desc("n_orders"), asc("p1"), asc("p2"))
       .limit(k)
-  }
 
   /** The ITEM-ITEM serving table — the batch job behind every
     * "customers also bought" shelf: top-`perItem` co-occurring products
     * PER product, precomputed so serving is a point lookup instead of
-    * the per-seed join the /recs hot path runs. Same basket-bounded
-    * in-partition pair generation as [[allPairsCoOccurrence]], emitted
-    * in BOTH directions (the table is per seed), then a rank window
-    * partitioned by product — no global sort, and the window's groups
-    * are per-product candidate lists, already bounded by the basket
-    * cap. */
+    * the per-seed join the /recs hot path runs. Both orientations of
+    * each [[pairCounts]] row (the table is per seed) from one explode,
+    * then a rank window partitioned by product — no global sort, and the
+    * window's groups are per-product candidate lists, already bounded by
+    * the basket cap. */
   def itemItemTopK(spark: SparkSession, dir: String,
                    perItem: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = boundedBaskets(spark, dir)
-      .select(explode(flatten(transform(col("ps"),
-        p1 => transform(filter(col("ps"), p2 => p2 =!= p1),
-          p2 => struct(p1.as("p"), p2.as("q")))))).as("pair"))
-    pairs.select(col("pair.p").as("product_id"),
-        col("pair.q").as("rec_product_id"))
-      .groupBy("product_id", "rec_product_id")
-      .agg(count(lit(1)).as("n_orders"))
+    pairCounts(spark, dir)
+      .select(explode(array(
+        struct(col("p1").as("product_id"), col("p2").as("rec_product_id"),
+          col("n12").as("n_orders")),
+        struct(col("p2").as("product_id"), col("p1").as("rec_product_id"),
+          col("n12").as("n_orders")))).as("r"))
+      .select("r.*")
       .withColumn("rec_rank", row_number().over(
         Window.partitionBy("product_id")
           .orderBy(desc("n_orders"), asc("rec_product_id"))))
@@ -505,34 +507,15 @@ object GraphAlgs {
         col("n_orders").cast("double").as("score"),
         lit("item-item").as("reason"))
 
-  /** Distinct co-purchase product pairs (p1 < p2), basket-bounded like
-    * [[allPairsCoOccurrence]] and generated the same in-partition way.
-    * Memoized: feeds every consumer of the undirected product graph. */
+  /** Distinct co-purchase product pairs (p1 < p2) — the edge set of the
+    * undirected co-purchase graph, the keys of [[pairCounts]]. */
   def coPurchasePairs(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.get(spark, "co-purchase-pairs", dir) {
-      boundedBaskets(spark, dir).select(explode(flatten(transform(col("ps"),
-        p1 => transform(filter(col("ps"), p2 => p2 > p1),
-          p2 => struct(p1.as("p1"), p2.as("p2")))))).as("pair"))
-        .select(col("pair.p1").as("p1"), col("pair.p2").as("p2"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    pairCounts(spark, dir).select("p1", "p2")
 
-  /** Exact triangle count over the undirected co-purchase graph.
-    *
-    * Edges are re-oriented low-degree → high-degree (ties by id) — the
-    * classic distributed-triangle trick: wedge fan-out is then bounded
-    * by O(m^1.5) instead of sum(deg²), so one celebrity product cannot
-    * dominate the wedge join at 100 TB. The COUNT is orientation-
-    * independent (each triangle appears exactly once under any
-    * consistent total order), so the DuckDB twin may use the plain
-    * id-order a<b<c formulation — same number, simpler SQL. Degree
-    * relation is |products|-sized → broadcast into both orientation
-    * joins; the wedge and closure joins are the only shuffles. */
   /** Per-vertex degree over the undirected co-purchase graph. Memoized
     * (|products| rows): triangles, clustering, k-core, assortativity,
     * and link prediction all fold it — without the memo each consumer
-    * re-aggregates the persisted pair relation. */
+    * re-aggregates the pair relation. */
   def coPurchaseDegrees(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.get(spark, "co-purchase-degrees", dir) {
       val pairs = coPurchasePairs(spark, dir)
@@ -583,10 +566,21 @@ object GraphAlgs {
       .limit(k)
   }
 
-  /** All closed triangles (a,b,c), each exactly once, a ≺ b ≺ c under
-    * the degree-then-id total order. Memoized + persisted: the wedge
-    * join is the expensive step and BOTH the count and the clustering-
-    * coefficient queries fold this one relation. */
+  /** All closed triangles (a,b,c) of the undirected co-purchase graph,
+    * each exactly once, a ≺ b ≺ c under the degree-then-id total order.
+    * Memoized + persisted: the wedge join is the expensive step and BOTH
+    * the count and the clustering-coefficient queries fold this one
+    * relation.
+    *
+    * Edges are re-oriented low-degree → high-degree (ties by id) — the
+    * classic distributed-triangle trick: wedge fan-out is then bounded
+    * by O(m^1.5) instead of sum(deg²), so one celebrity product cannot
+    * dominate the wedge join at 100 TB. The COUNT is orientation-
+    * independent (each triangle appears exactly once under any
+    * consistent total order), so the DuckDB twin may use the plain
+    * id-order a<b<c formulation — same number, simpler SQL. Degree
+    * relation is |products|-sized → broadcast into both orientation
+    * joins. */
   def closedTriangles(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.get(spark, "closed-triangles", dir) {
       closedTrianglesUncached(spark, dir)
@@ -742,19 +736,16 @@ object GraphAlgs {
 
   /** Association rules over baskets: confidence P(cons|ante) and lift
     * for the top-k rules by lift. Every input is an exact count —
-    * support from the basket-bounded pair fan-out, antecedent/consequent
-    * sizes from the distinct CONTAINS edge set, N a 1-row broadcast —
+    * support from [[pairCounts]], antecedent/consequent sizes from the
+    * distinct CONTAINS edge set, N a 1-row broadcast —
     * and each output ratio is a single engine-portable double division.
     * Both orientations of each unordered pair become candidate rules.
     * Item counts are |products|-sized → the joins stay keyed (AQE may
     * broadcast); nothing here is quadratic beyond the bounded pair set. */
   def associationRules(spark: SparkSession, dir: String,
                        k: Int = 20, minSupport: Long = 2): DataFrame = {
-    val pairs12 = coPurchasePairsCounted(spark, dir)
-      .filter(col("n12") >= minSupport)
-    // Both orientations from ONE pass over the pair aggregate — a
-    // unionAll of two selects re-executes the whole basket fan-out per
-    // branch (the same 3×-recompute trap the clustering union hit).
+    val pairs12 = pairCounts(spark, dir).filter(col("n12") >= minSupport)
+    // Both orientations from ONE pass over the pair relation.
     val rules = pairs12.select(explode(array(
         struct(col("p1").as("ante"), col("p2").as("cons"), col("n12")),
         struct(col("p2").as("ante"), col("p1").as("cons"), col("n12"))))
@@ -781,17 +772,6 @@ object GraphAlgs {
           (col("n_ante").cast("double") * col("n_cons"))).as("lift"))
       .orderBy(desc("lift"), asc("ante"), asc("cons"))
       .limit(k)
-  }
-
-  /** Co-purchase pairs WITH their order support (p1 < p2) — the counted
-    * sibling of [[coPurchasePairs]], same in-partition fan-out. */
-  def coPurchasePairsCounted(spark: SparkSession, dir: String): DataFrame = {
-    boundedBaskets(spark, dir).select(explode(flatten(transform(col("ps"),
-      p1 => transform(filter(col("ps"), p2 => p2 > p1),
-        p2 => struct(p1.as("p1"), p2.as("p2")))))).as("pair"))
-      .select(col("pair.p1").as("p1"), col("pair.p2").as("p2"))
-      .groupBy("p1", "p2")
-      .agg(count(lit(1)).as("n12"))
   }
 
   /** The registry's three fixed-rank rows propagate over THESE seeds in

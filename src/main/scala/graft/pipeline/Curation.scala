@@ -393,11 +393,13 @@ object Curation {
     * sets here, shuffle-hash on the same key at corpus scale). */
   def curateFull(spark: SparkSession, dir: String,
                  minQuality: Double = 0.5): DataFrame =
-    // Memoized + persisted: the released set is the root of the whole
-    // release tier (manifest, datasheet, epoch order, materialization)
-    // — each consumer otherwise re-runs all five gates. Same pattern
-    // as Dedup.shingles/minhashComponents; at 100 TB this is the
-    // released-ids table a pipeline materializes once per release.
+    // Memoized and materialized inside the build: the released set is
+    // the root of the whole release tier (manifest, datasheet, epoch
+    // order, materialization) — each consumer otherwise re-runs all five
+    // gates, and a lazy persist would be filled by whichever consumer
+    // job reached it first (epoch order's global-position rank reads it
+    // twice in one plan). At 100 TB this is the released-ids table a
+    // pipeline materializes once per release.
     graft.Memo.get(spark, "curate-full", (dir, minQuality)) {
       val nearDupDrop = graft.similarity.Similarity.dupAssignments(spark, dir)
         .filter(col("id") =!= col("comp"))
@@ -409,7 +411,7 @@ object Curation {
         .join(nearDupDrop, Seq("doc_id"), "left_anti")
         .join(contaminated, Seq("doc_id"), "left_anti")
         .orderBy("doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(true)
     }
 
   /** Systematic probability-proportional-to-size sample, ~`n` picks per

@@ -204,6 +204,20 @@ class CurationSpec extends SparkTestBase {
     }
   }
 
+  test("the released set comes back materialized, never a lazy persist") {
+    // Epoch order's global-position rank reads curateFull more than once
+    // in one plan; a lazy persist there is filled by whichever job gets
+    // to it first. The memoized frame must already sit on a filled
+    // checkpoint when it is returned.
+    import org.apache.spark.sql.execution.LogicalRDD
+    Curation.curateFull(spark, "/root/testdata/sf0.001")
+        .queryExecution.logical match {
+      case l: LogicalRDD => assert(l.rdd.isCheckpointed,
+        "the released set is an unmaterialized checkpoint")
+      case other => fail(s"the released set is not a checkpoint scan:\n$other")
+    }
+  }
+
   test("full release gate is curate minus near-dup members and contaminated docs") {
     import org.apache.spark.sql.functions.col
     val base = Curation.curate(spark, dir).collect()

@@ -383,6 +383,8 @@ class GraphSpec extends SparkTestBase {
     assertMaterialized("components", GraphAlgs.componentLabels(spark, sf, 1))
     assertMaterialized("components early exit",
       GraphAlgs.componentLabels(spark, sf, 9))
+    assertMaterialized("pair counts", GraphAlgs.pairCounts(spark, sf))
+    assertMaterialized("co-purchase pairs", GraphAlgs.coPurchasePairs(spark, sf))
     val pairs = GraphAlgs.coPurchasePairs(spark, sf)
       .select(col("p1").as("d1"), col("p2").as("d2"))
     assertMaterialized("pair components", GraphAlgs.pairComponents(pairs, 1))

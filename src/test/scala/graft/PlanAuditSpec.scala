@@ -202,6 +202,18 @@ class PlanAuditSpec extends SparkTestBase {
       s"no product-keyed partitioning for the rank window:\n$plan")
   }
 
+  test("co-occurrence rows read the counted pair relation, no basket fan-out") {
+    // All-pairs, item-item and association rules are projections of
+    // GraphAlgs.pairCounts: the one quadratic basket fan-out runs inside
+    // its build, so none of their executed plans may re-run it.
+    for (name <- Seq("allpairs_cooccurrence", "item_item_topk",
+        "association_rules")) {
+      val plan = planOf(name)
+      assert(!plan.contains("flatten(transform("),
+        s"$name re-runs the basket pair fan-out:\n$plan")
+    }
+  }
+
   test("dedup candidate generation never goes quadratic") {
     // The LSH/blocking families must join on bucket keys — a
     // CartesianProduct or nested-loop join anywhere means the candidate

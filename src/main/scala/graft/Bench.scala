@@ -74,6 +74,24 @@ object Bench {
     (cpuMs, ioMs, ioBytes)
   }
 
+  /** `f` over the lines of /proc/stat (Linux best-effort: None when the
+    * file is unreadable or `f` fails on it). */
+  private def procStat[A](f: Iterator[String] => A): Option[A] =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try Some(f(src.getLines())) finally src.close()
+    } catch { case _: Throwable => None }
+
+  /** Hypervisor steal brackets (like the shuffle listener): /proc/stat's
+    * aggregate cpu line as (steal ticks, total ticks). A hypervisor can
+    * steal CPU in BURSTS that load averages cannot see (r6: the same
+    * workload read 452 s at ~5.6% steal and 132 s clean), so every
+    * per-query timing carries its own steal_pct — a reader can discount
+    * steal-poisoned rows without re-running. */
+  private def cpuTicks(): Option[(Long, Long)] =
+    procStat(_.next().trim.split("\\s+").drop(1).map(_.toLong))
+      .filter(_.length >= 8).map(t => (t(7), t.sum))
+
   def main(args: Array[String]): Unit = {
     // Ambient host load BEFORE this JVM does any work: the end-of-run
     // reading includes the bench's own threads, so the pair brackets how
@@ -83,13 +101,7 @@ object Bench {
     val wallStartMs = System.currentTimeMillis()
     // Steal ticks at main start (warm-up included) for the self-stamped
     // clean gate below — same bracket the external harness uses.
-    val mainTicks0: Option[(Long, Long)] =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        val line = try src.getLines().next() finally src.close()
-        val t = line.trim.split("\\s+").drop(1).map(_.toLong)
-        if (t.length >= 8) Some((t(7), t.sum)) else None
-      } catch { case _: Throwable => None }
+    val mainTicks0 = cpuTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Host calibration BEFORE the SparkSession exists (~2 s, untimed):
     // the Spark-free anchor every cross-round drift computation divides by.
@@ -208,19 +220,6 @@ object Bench {
         }
         walk(qe.executedPlan)
       } catch { case _: Throwable => -1L }
-    // Hypervisor steal brackets (Linux best-effort, like the shuffle
-    // listener): /proc/stat's aggregate cpu line, steal ticks vs total
-    // ticks. This host steals CPU in BURSTS that load averages cannot
-    // see (r6: the same workload read 452 s at ~5.6% steal and 132 s
-    // clean), so every per-query timing carries its own steal_pct —
-    // a judge can discount steal-poisoned rows without re-running.
-    def cpuTicks(): Option[(Long, Long)] =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        val line = try src.getLines().next() finally src.close()
-        val t = line.trim.split("\\s+").drop(1).map(_.toLong)
-        if (t.length >= 8) Some((t(7), t.sum)) else None
-      } catch { case _: Throwable => None }
     def stealPct(before: Option[(Long, Long)],
                  after: Option[(Long, Long)]): Double =
       (before, after) match {
@@ -373,13 +372,8 @@ object Bench {
     // steal pressure. Fallback to the allotment only if /proc/stat is
     // unreadable (in which case stealTicks is -1 and the gate fails
     // closed anyway).
-    val hostCores: Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        val n = try src.getLines().count(_.matches("cpu\\d+\\s.*"))
-        finally src.close()
-        if (n > 0) n.toLong else cpus.toLong
-      } catch { case _: Throwable => cpus.toLong }
+    val hostCores: Long = procStat(_.count(_.matches("cpu\\d+\\s.*")))
+      .filter(_ > 0).getOrElse(cpus).toLong
     val stealBudget = wallS * hostCores / 2
     // Fail CLOSED on missing steal data: an artifact that cannot prove
     // its bracket was quiet must not self-certify as clean.

@@ -1,7 +1,7 @@
 package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's demo front door (reference `app/main.py:11-135`, a
   * FastAPI service over Neo4j), re-expressed as a minimal pure-JDK HTTP
@@ -24,11 +24,14 @@ import org.apache.spark.sql.SparkSession
   * Same wire shapes, same fallback cascade (co-occurrence → same-category,
   * reference `app/main.py:61,70-71`), same graceful degradation (any
   * engine error → 200 with empty items, `app/main.py:124-126`). The
-  * serving path is the engine's top-k plans — the ONLY driver-side
-  * materialization is the k-row collect behind the limit
-  * (operators/Json.toItemsJson). This is a demo shim, deliberately thin:
-  * a production deployment would put the same calls behind a real app
-  * server; nothing in the engine changes.
+  * serving path is the engine's top-k plans, run by
+  * `operators.Recs.cascade`: each tried arm's ≤k rows are collected to
+  * the driver once, behind the limit, and the reply renders the elected
+  * arm from that local relation. The PPR arm also keeps its collected
+  * rows in a bounded driver-side cache (GraphAlgs.pprRecsServing). This
+  * is a demo shim, deliberately thin: a production deployment would put
+  * the same calls behind a real app server; nothing in the engine
+  * changes.
   */
 object Serve {
 
@@ -56,49 +59,26 @@ object Serve {
         handler("""{"items": [], "took_ms": 0}""") { ex =>
       val started = System.nanoTime()
       val params = queryParams(ex)
+      val arm = params.get("arm")
+      // One arm chain per request through the collect-once cascade:
+      // `arm=item`/`arm=rrf` (product) or `arm=ppr` (customer, the
+      // ppr_fixed_recs tier) ahead of the reference's default pair; any
+      // other arm value leaves the default pair untouched.
+      val chain: Option[Seq[() => DataFrame]] =
+        params.get("product_id").flatMap(_.toLongOption).map { pid =>
+          arm.collect {
+            case "item" =>
+              () => graph.GraphAlgs.itemItemServing(spark, dir, pid)
+            case "rrf" => () => operators.Recs.rrfServing(spark, dir, pid)
+          }.toSeq ++ operators.Recs.productArms(spark, dir, pid)
+        }.orElse(params.get("customer_id").flatMap(_.toLongOption).map { cid =>
+          arm.collect {
+            case "ppr" => () => graph.GraphAlgs.pprRecsServing(spark, dir, cid)
+          }.toSeq ++ operators.Recs.customerArms(spark, dir, cid)
+        })
       val items =
-        try {
-          params.get("product_id").flatMap(id => id.toLongOption).map { pid =>
-            // Product-seed arms (VERDICT r14 item 4): `arm=item` serves
-            // the precomputed item-item shelf, `arm=rrf` the
-            // rank-fusion tier — both the exact oracle-pinned rows
-            // projected to the wire shape, both cascading to the
-            // reference's co-occurrence→same-category default when the
-            // seed has no signal under the chosen arm. Any other arm
-            // value leaves the default cascade untouched.
-            val armItems = params.get("arm") match {
-              case Some("item") => operators.Json.toItemsArray(
-                graph.GraphAlgs.itemItemServing(spark, dir, pid))
-              case Some("rrf") => operators.Json.toItemsArray(
-                operators.Recs.rrfServing(spark, dir, pid))
-              case _ => "[]"
-            }
-            if (armItems != "[]") armItems
-            else operators.Json.toItemsArray(
-              operators.Recs.recsForProduct(spark, dir, pid))
-          }.orElse {
-            params.get("customer_id").flatMap(_.toLongOption).map { cid =>
-              // The reference's declared upgrade (main.py:31-33): with
-              // ?arm=ppr the customer arm serves Personalized PageRank —
-              // the exact fixed-iteration tier the ppr_fixed_recs oracle
-              // row pins — cascading to the co-occurrence arms when the
-              // seed has no propagated mass (unknown customer), the same
-              // degradation posture as the reference's GDS-absent path.
-              val usePpr = params.get("arm").contains("ppr")
-              // Render the PPR arm ONCE (ADVICE r14: the old
-              // isEmpty-then-render pair ran the top-k stage twice);
-              // pprRecsServing returns a local relation, so the empty
-              // probe on the rendered array is free.
-              val pprItems =
-                if (usePpr)
-                  operators.Json.toItemsArray(
-                    graph.GraphAlgs.pprRecsServing(spark, dir, cid))
-                else "[]"
-              if (usePpr && pprItems != "[]") pprItems
-              else operators.Json.toItemsArray(
-                operators.Recs.recsForCustomer(spark, dir, cid))
-            }
-          }.getOrElse("[]") // neither provided → empty list (main.py:123)
+        try chain.fold("[]") { arms => // neither id → empty list (main.py:123)
+          operators.Json.toItemsArray(operators.Recs.cascade(spark, arms: _*))
         } catch { case scala.util.control.NonFatal(_) => "[]" }
       val tookMs = (System.nanoTime() - started) / 1000000L
       s"""{"items": $items, "took_ms": $tookMs}"""

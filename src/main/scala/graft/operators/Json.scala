@@ -28,9 +28,9 @@ object Json {
       .orderBy("event_type")
 
   /** S6 — the API-response shim: a DataFrame rendered to the reference's
-    * `{"items": [...]}` wire shape. The ONLY driver-side materialization
-    * in the engine, and it sits behind the top-k limit, so the collect is
-    * k rows, never the relation. */
+    * `{"items": [...]}` wire shape. Callers pass a top-k result (the
+    * serving path passes `Recs.cascade`'s local relation), so the collect
+    * is k rows, never the relation. */
   def toItemsJson(df: DataFrame): String =
     s"""{"items": ${toItemsArray(df)}}"""
 

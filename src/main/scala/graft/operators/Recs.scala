@@ -44,7 +44,16 @@ object Recs {
     * order id; seed side is point-filtered → broadcast.
     */
   def coOccurrence(spark: SparkSession, dir: String, seedPart: Long,
-                   k: Int = 10): DataFrame = {
+                   k: Int = 10): DataFrame =
+    coOccurrenceScores(spark, dir, seedPart)
+      .withColumn("reason", lit("co-occurrence"))
+      .orderBy(desc("score"), asc("product_id"))
+      .limit(k)
+
+  /** All of the seed's co-occurring products, scored by shared orders —
+    * behind [[coOccurrence]]'s top-k and [[rrfFusion]]'s co rank. */
+  private def coOccurrenceScores(spark: SparkSession, dir: String,
+                                 seedPart: Long): DataFrame = {
     val li = rawItems(spark, dir)
     val seedOrders = li.filter(col("product_id") === seedPart)
       .select("order_id").distinct()
@@ -53,9 +62,6 @@ object Recs {
       .distinct() // A6 dedup on the pruned slice, not the full table
       .groupBy("product_id")
       .agg(count(lit(1)).cast("double").as("score"))
-      .withColumn("reason", lit("co-occurrence"))
-      .orderBy(desc("score"), asc("product_id"))
-      .limit(k)
   }
 
   /** J2+O2 — same-category fallback (reference `app/main.py:72-84`):
@@ -63,17 +69,23 @@ object Recs {
     * Cypher `LIMIT 10` is non-deterministic; we impose a total order
     * (FIXTURES.md §3) so the oracle hash-match is stable. */
   def sameCategory(spark: SparkSession, dir: String, seedPart: Long,
-                   k: Int = 10): DataFrame = {
+                   k: Int = 10): DataFrame =
+    sameCategoryCandidates(spark, dir, seedPart)
+      .select(col("product_id"), lit(1.0).as("score"),
+        lit("same-category").as("reason"))
+      .orderBy(asc("product_id"))
+      .limit(k)
+
+  /** All products sharing the seed's category, the seed excluded —
+    * behind [[sameCategory]]'s top-k and [[rrfFusion]]'s category rank. */
+  private def sameCategoryCandidates(spark: SparkSession, dir: String,
+                                     seedPart: Long): DataFrame = {
     val part = Tables.load(spark, dir, "part")
       .select(col("p_partkey").as("product_id"), col("p_brand").as("category_id"))
     val seedCat = part.filter(col("product_id") === seedPart)
       .select("category_id")
     part.join(broadcast(seedCat), "category_id")
       .filter(col("product_id") =!= seedPart)
-      .select(col("product_id"), lit(1.0).as("score"),
-        lit("same-category").as("reason"))
-      .orderBy(asc("product_id"))
-      .limit(k)
   }
 
   /** PLACED edge set: customer → order (reference `app/etl.py:222-233`). */
@@ -86,11 +98,7 @@ object Recs {
     * the point filter → broadcast; the fact table is pruned by the
     * broadcast join BEFORE dedup. */
   def purchasedProducts(spark: SparkSession, dir: String,
-                        custId: Long): DataFrame =
-    purchasedBy(spark, dir, custId)
-
-  private def purchasedBy(spark: SparkSession, dir: String,
-                          custId: Long): DataFrame = {
+                        custId: Long): DataFrame = {
     val myOrders = placedEdges(spark, dir)
       .filter(col("customer_id") === custId).select("order_id")
     rawItems(spark, dir).join(broadcast(myOrders), "order_id")
@@ -146,7 +154,7 @@ object Recs {
                            k: Int = 10): DataFrame = {
     val part = Tables.load(spark, dir, "part")
       .select(col("p_partkey").as("product_id"), col("p_brand").as("category_id"))
-    val mine = purchasedBy(spark, dir, custId)
+    val mine = purchasedProducts(spark, dir, custId)
     val myCats = part.join(broadcast(mine), "product_id")
       .select("category_id").distinct()
     part.join(broadcast(myCats), "category_id")
@@ -415,21 +423,40 @@ object Recs {
          |LIMIT $k""".stripMargin)
   }
 
-  /** The reference's fallback cascade (reference `app/main.py:61,70-71`):
-    * run the rich query; if empty, run the cheap one. Kept as engine-level
-    * control flow — `isEmpty` on a TakeOrderedAndProject plan is cheap. */
-  def recsForProduct(spark: SparkSession, dir: String, seedPart: Long,
-                     k: Int = 10): DataFrame = {
-    val primary = coOccurrence(spark, dir, seedPart, k)
-    if (primary.isEmpty) sameCategory(spark, dir, seedPart, k) else primary
+  /** The reference's fallback cascade (reference
+    * `app/main.py:61,70-71,99,108-109`): run each arm in order, collecting
+    * its ≤k rows once, and return the first non-empty arm's rows (the
+    * last arm's, empty, when none has any) as a LOCAL relation — so the
+    * caller's emptiness check and render never re-run a plan. Every
+    * `/recs` arm chain in graft.Serve runs through here. */
+  def cascade(spark: SparkSession, arms: (() => DataFrame)*): DataFrame = {
+    val (schema, rows) = arms.iterator
+      .map { arm => val df = arm(); (df.schema, df.collect()) }
+      .zipWithIndex.collectFirst {
+        case (run, i) if run._2.nonEmpty || i == arms.size - 1 => run
+      }.get
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
+  /** The reference's arm pairs: co-occurrence, then same-category ... */
+  def productArms(spark: SparkSession, dir: String, seedPart: Long,
+                  k: Int = 10): Seq[() => DataFrame] =
+    Seq(() => coOccurrence(spark, dir, seedPart, k),
+      () => sameCategory(spark, dir, seedPart, k))
+
+  /** ... and customer co-occurrence, then the customer's categories. */
+  def customerArms(spark: SparkSession, dir: String, custId: Long,
+                   k: Int = 10): Seq[() => DataFrame] =
+    Seq(() => customerRecs(spark, dir, custId, k),
+      () => customerCategoryRecs(spark, dir, custId, k))
+
+  def recsForProduct(spark: SparkSession, dir: String, seedPart: Long,
+                     k: Int = 10): DataFrame =
+    cascade(spark, productArms(spark, dir, seedPart, k): _*)
+
   def recsForCustomer(spark: SparkSession, dir: String, custId: Long,
-                      k: Int = 10): DataFrame = {
-    val primary = customerRecs(spark, dir, custId, k)
-    if (primary.isEmpty) customerCategoryRecs(spark, dir, custId, k)
-    else primary
-  }
+                      k: Int = 10): DataFrame =
+    cascade(spark, customerArms(spark, dir, custId, k): _*)
 
   /** Session co-visitation — the behavioral-events counterpart of the
     * order-basket co-occurrence arm: products VIEWED within the same
@@ -498,28 +525,15 @@ object Recs {
   def rrfFusion(spark: SparkSession, dir: String, seedPart: Long,
                 k: Int = 10, rrfK: Int = 60): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val li = rawItems(spark, dir)
-    val seedOrders = li.filter(col("product_id") === seedPart)
-      .select("order_id").distinct()
-    val coRank = li.filter(col("product_id") =!= seedPart)
-      .join(broadcast(seedOrders), "order_id")
-      .distinct()
-      .groupBy("product_id").agg(count(lit(1)).as("score"))
+    val coRank = coOccurrenceScores(spark, dir, seedPart)
       .select(col("product_id"), row_number()
         .over(Window.orderBy(desc("score"), asc("product_id"))).as("r_co"))
-    val part = Tables.load(spark, dir, "part")
-      .select(col("p_partkey").as("product_id"),
-        col("p_brand").as("category_id"))
-    val seedCat = part.filter(col("product_id") === seedPart)
-      .select("category_id")
     // The category arm ranks a category-sized slice of the catalog —
     // dimension-bounded, but at warehouse scale still a fat list, so the
     // rank is the range-partitioned global position, not a one-task
     // window (values identical: same (product_id) total order).
     val catRank = Ranks.withGlobalPos(
-      part.join(broadcast(seedCat), "category_id")
-        .filter(col("product_id") =!= seedPart)
-        .select(col("product_id")),
+      sameCategoryCandidates(spark, dir, seedPart).select(col("product_id")),
       Seq(asc("product_id")), "r_cat")
       .select(col("product_id"), col("r_cat"))
     coRank.join(catRank, Seq("product_id"), "full_outer")
@@ -722,7 +736,7 @@ object Recs {
     val score = w.indices.map(j =>
       element_at(col("features"), j + 1).cast("double") *
         lit(w(j).toDouble)).reduce(_ + _)
-    val mine = purchasedBy(spark, dir, custId)
+    val mine = purchasedProducts(spark, dir, custId)
     items.select(col("product_id").cast("bigint").as("product_id"),
         score.as("score"))
       .join(broadcast(mine), Seq("product_id"), "left_anti")

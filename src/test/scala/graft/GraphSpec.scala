@@ -7,6 +7,19 @@ import graft.graph.{GraphAlgs, GraphBuilder}
 class GraphSpec extends SparkTestBase {
   private def dir = SeedFixture.dir
 
+  test("the item-item shelf comes back with its cached buffers loaded") {
+    // Concurrent first arm=item requests used to race to fill a lazy
+    // persist; the shelf must be filled inside its memoized build.
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val shelf = GraphAlgs.itemItemShelf(spark, dir)
+    val cached = shelf.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r
+    }
+    assert(cached.isDefined, "the shelf is not a persisted relation")
+    assert(cached.get.cacheBuilder.isCachedColumnBuffersLoaded,
+      "the shelf came back as an unfilled lazy persist")
+  }
+
   test("nodes: 12 across 4 labels, unique ids (G2 constraint audit empty)") {
     val n = GraphBuilder.nodes(spark, dir)
     val byLabel = n.groupBy("label").count().collect()

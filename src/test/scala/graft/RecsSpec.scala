@@ -33,6 +33,49 @@ class RecsSpec extends SparkTestBase {
     // P2 has co-occurrence → cascade returns the primary result.
     val primary = Recs.recsForProduct(spark, dir, 2L).collect()
     assert(primary.map(_.getString(2)).forall(_ == "co-occurrence"))
+    // Both cascades (product and customer) hand back the elected arm's
+    // collected rows as a LOCAL relation, so a caller's emptiness check
+    // and render never re-run an arm's plan. The seed fixture plus P5
+    // (CAT1, never ordered) and C3 owning O4 = {P1}: P5 has no
+    // co-occurrence but CAT1 peers; C1's co-occurrences are all owned
+    // but CAT1 still holds P5; C3 co-occurs with P2 through O1.
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val d = java.nio.file.Files.createTempDirectory("graft-cascade").toString
+    Seq((1L, "CAT1"), (2L, "CAT1"), (3L, "CAT2"), (4L, "CAT1"), (5L, "CAT1"))
+      .toDF("p_partkey", "p_brand")
+      .write.mode("overwrite").parquet(s"$d/part.parquet")
+    Seq((1L, 1L), (2L, 2L), (3L, 1L), (4L, 3L)).toDF("o_orderkey", "o_custkey")
+      .write.mode("overwrite").parquet(s"$d/orders.parquet")
+    Seq((1L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (3L, 2L), (4L, 1L))
+      .toDF("l_orderkey", "l_partkey")
+      .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    def local(df: org.apache.spark.sql.DataFrame) = {
+      assert(df.queryExecution.logical.isInstanceOf[LocalRelation],
+        s"the cascade returned a plan, not its rows:\n${df.queryExecution.logical}")
+      rows(df)
+    }
+    val cases = Seq(
+      // (cascade, primary arm, fallback arm, elected: 1 primary, 2 fallback, 0 none)
+      (Recs.recsForProduct(spark, d, 2L), Recs.coOccurrence(spark, d, 2L),
+        Recs.sameCategory(spark, d, 2L), 1),
+      (Recs.recsForProduct(spark, d, 5L), Recs.coOccurrence(spark, d, 5L),
+        Recs.sameCategory(spark, d, 5L), 2),
+      (Recs.recsForProduct(spark, d, 3L), Recs.coOccurrence(spark, d, 3L),
+        Recs.sameCategory(spark, d, 3L), 0),
+      (Recs.recsForCustomer(spark, d, 3L), Recs.customerRecs(spark, d, 3L),
+        Recs.customerCategoryRecs(spark, d, 3L), 1),
+      (Recs.recsForCustomer(spark, d, 1L), Recs.customerRecs(spark, d, 1L),
+        Recs.customerCategoryRecs(spark, d, 1L), 2),
+      (Recs.recsForCustomer(spark, d, 2L), Recs.customerRecs(spark, d, 2L),
+        Recs.customerCategoryRecs(spark, d, 2L), 0))
+    for (((got, first, second, elected), i) <- cases.zipWithIndex) {
+      val (p, f) = (rows(first), rows(second))
+      assert((if (p.nonEmpty) 1 else if (f.nonEmpty) 2 else 0) == elected,
+        s"case $i: the fixture does not exercise the intended arm")
+      assert(local(got) == (if (p.nonEmpty) p else f), s"case $i")
+    }
   }
 
   test("customer C1 recs: anti-join removes all already-purchased candidates") {

@@ -104,6 +104,27 @@ class ServeSpec extends SparkTestBase {
     } finally server.stop(0)
   }
 
+  test("an unknown seed under arm=item, rrf and ppr gets the default cascade's exact items") {
+    val server = Serve.start(spark, dir, port = 0)
+    try {
+      val port = server.getAddress.getPort
+      def items(path: String): String = {
+        val body = get(port, path)
+        assert(body.startsWith("""{"items": """) &&
+          body.contains(""", "took_ms": """), s"$path broke the shape: $body")
+        body.stripPrefix("""{"items": """).replaceAll(""", "took_ms": \d+}$""", "")
+      }
+      for ((kind, arms) <- Seq("product_id" -> Seq("item", "rrf"),
+                               "customer_id" -> Seq("ppr"));
+           id <- Seq(999999999L, -1L)) {
+        val default = items(s"/recs?$kind=$id")
+        for (arm <- arms)
+          assert(items(s"/recs?$kind=$id&arm=$arm") == default,
+            s"$kind=$id arm=$arm diverged from the default cascade")
+      }
+    } finally server.stop(0)
+  }
+
   test("16 parallel clients get each their own seed's answer — no cross-request bleed") {
     // The reference runs a driver per request (app/main.py's FastAPI +
     // Neo4j session lifecycle); here all requests share ONE SparkSession
